@@ -226,10 +226,26 @@ object Pipeline {
     }
   }
 
+  /** Per-subcommand usage lines; the top-level usage joins them. */
+  private object Usage {
+    val run = "Pipeline <inPathOrDir> <outDir> [parquet|csv|json]"
+    val status = "Pipeline status <outDir> [RUNNING|SUCCESS|FAILED] [limit]"
+    val cleanup = "Pipeline cleanup <outDir> [--force] [--force-unmarked] [--delete-ledger]"
+    val exportShards = "Pipeline export-shards <inParquet> <outDir> [nShards] [idCol] [textCol]"
+    val curate = "Pipeline curate <inPath> <outDir> [--min-quality X] " +
+      "[--sample F] [--max-tokens N] [--format parquet|tar] [--shards N] " +
+      "[--blocked-domains d1,d2] [--dry-run]"
+    val crawl = "Pipeline crawl <inDir> <outDir> [--agent NAME] " +
+      "[--blocked-domains d1,d2] [--robots PARQUET] [--corpus PARQUET] " +
+      "[--psl PARQUET] [--change-aware] [--files-per-drain N] " +
+      "[--compact-every K] [--recrawl-base N] [--recrawl-max N] " +
+      "[--control-refresh N] [--dry-run]"
+    val all: String = Seq(run, status, cleanup, exportShards, curate, crawl).mkString(" | ")
+  }
+
   /** `Pipeline cleanup <outDir> [--force] [--force-unmarked] [--delete-ledger]`. */
   private def cleanupMain(args: Array[String]): Unit = {
-    val usage =
-      "usage: Pipeline cleanup <outDir> [--force] [--force-unmarked] [--delete-ledger]"
+    val usage = s"usage: ${Usage.cleanup}"
     // The destination must be first: "cleanup --force /out" would treat
     // the flag as the path, find nothing, and report success while /out
     // stays untouched.
@@ -335,8 +351,7 @@ object Pipeline {
   }
 
   private def exportShardsMain(args: Array[String]): Unit = {
-    val usage =
-      "usage: Pipeline export-shards <inParquet> <outDir> [nShards] [idCol] [textCol]"
+    val usage = s"usage: ${Usage.exportShards}"
     require(args.length >= 2 && !args(0).startsWith("-"), usage)
     val nShards = if (args.length > 2) {
       require(args(2).toIntOption.isDefined, s"nShards must be an int: ${args(2)}\n$usage")
@@ -524,6 +539,16 @@ object Pipeline {
       stateVersion: Option[Int],
       error: Option[String])
 
+  /** One drain's stage counts: the `drains` ledger row after its
+    * `batch_id`, and the dry-run line (names without `n_`). */
+  final case class DrainCounts(
+      n_batch: Long, n_after_domain: Long, n_after_robots: Long,
+      n_after_url: Long, n_new_url: Long, n_after_exact: Long,
+      n_after_intra: Long, n_survivors: Long, n_frontier: Long,
+      n_redirects: Long, n_robots_fetches: Long, n_sitemap_seeds: Long,
+      n_not_modified: Long, n_refetch: Long, n_assets: Long, n_failed: Long,
+      n_canonical: Long, n_noindex: Long, n_control: Long)
+
   /** Typed flags for `crawl` — every `None` falls back to a `crawl.*`
     * config key, the [[CurateArgs]] discipline.
     */
@@ -571,58 +596,6 @@ object Pipeline {
     }
     loop(rest.toList, CrawlArgs())
   }
-
-  /** Versioned durable state under `<outDir>/state`: each completed run
-    * commits `v<N>/{seen,index}` plus a `_COMMITTED` marker (a partial
-    * write from a crash has no marker and is ignored), then deletes
-    * `v<N-1>`. The loader takes the highest committed version.
-    */
-  private def latestStateVersion(
-      fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: org.apache.hadoop.fs.Path): Option[Int] = {
-    if (!fs.exists(stateDir)) None
-    else fs.listStatus(stateDir).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.matches("v\\d+") &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_COMMITTED")))
-          Some(n.drop(1).toInt)
-        else None
-      }
-      .sorted.lastOption
-  }
-
-  /** Newest committed micro-batch id in a Structured Streaming
-    * checkpoint (the `commits/` HDFSMetadataLog — one file per
-    * committed batch, named by id). Durable-state DELTAS are only
-    * valid up to here: a batch whose foreachBatch wrote deltas but
-    * crashed before the offset commit will REPLAY, so its stale deltas
-    * must be ignored on restore (the replay rewrites them
-    * idempotently).
-    */
-  private def lastCommittedBatch(
-      fs: org.apache.hadoop.fs.FileSystem, ckptDir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$ckptDir/commits")
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .flatMap(st => st.getPath.getName.toLongOption)
-      .maxOption
-  }
-
-  private def readIfExists(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[org.apache.spark.sql.DataFrame] =
-    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-      // a dir holding only _SUCCESS (an EMPTY ExactlyOnce append — the
-      // batch had no rows for this piece) carries no schema to infer;
-      // treat it as absent, same as no write at all
-      try Some(spark.read.parquet(path))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getErrorClass == "UNABLE_TO_INFER_SCHEMA" => None
-      }
-    else None
 
   /** `Pipeline crawl` — the q242 continuous-crawl loop as a
     * config-driven CLI, completing the O3 orchestration surface for
@@ -680,17 +653,17 @@ object Pipeline {
     * If-None-Match / If-Modified-Since instead of refetching blind.
     *
     * Durability: survivors, frontier, aliases and the per-drain ledger
-    * land batchId-keyed ([[graft.streaming.ExactlyOnce]]); every
-    * rolled state piece ALSO appends a batchId-keyed DELTA per drain
-    * under `state/deltas/` (seen/emitted hash rows, index extension
-    * frames, robots fetches, discovered sitemaps, host-graph edges,
-    * fetch-observation logs),
-    * so a run that dies mid-stream loses nothing the checkpoint
-    * committed: the next invocation restores `state/v<N>` plus the
-    * deltas of COMMITTED batches (replayed batches rewrite their
-    * deltas idempotently). A clean run end compacts everything into
-    * `state/v<N+1>` + `_COMMITTED` and reaps v<N>, the deltas, and the
-    * in-loop epoch compactions.
+    * land batchId-keyed ([[graft.streaming.ExactlyOnce]]); every piece
+    * of the rolled [[graft.sources.CrawlState]] (seen/emitted hash rows,
+    * index extension frames, robots fetches, sitemaps, host-graph
+    * edges, fetch-observation logs, …) ALSO appends a batchId-keyed
+    * DELTA per drain under `state/deltas/` ([[graft.sources.CrawlState.Store]]
+    * owns the format), so a run that dies mid-stream loses nothing the
+    * checkpoint committed: the next invocation restores `state/v<N>`
+    * plus the deltas of COMMITTED batches through the live drain's roll
+    * (replayed batches rewrite their deltas idempotently). A clean run
+    * end compacts everything into `state/v<N+1>` + `_COMMITTED` and
+    * reaps v<N>, the deltas, and the in-loop epoch compactions.
     *
     * `dryRun` BATCH-reads the whole input (no checkpoint, nothing
     * written) and prints the stage counts one drain of everything
@@ -756,9 +729,10 @@ object Pipeline {
       .map(p => graft.sources.Domains.prepareSuffixes(spark.read.parquet(p)))
 
     // ---- durable state: restore v<N> plus committed-batch deltas ----
-    val statePath = new org.apache.hadoop.fs.Path(s"$out/state")
-    val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val restoredV = latestStateVersion(fs, statePath)
+    val ckptDir = s"$out/ckpt"
+    val store = new graft.sources.CrawlState.Store(spark, out, ckptDir,
+      changeAware, robotsPath, corpusPath, rankIters, agent)
+    val restoredV = store.restoredV
     // Output-schema migration guard (r16 ADVICE): resuming over a
     // directory written by a pre-refresh build would APPEND wider-
     // schema parquet next to the old files, and a plain read then
@@ -768,7 +742,7 @@ object Pipeline {
         "drains" -> "n_control", "aliases" -> "kind", "assets" -> "reason")) {
       // readIfExists: an empty dir (a killed run's bare _SUCCESS, or
       // no committed files yet) carries no schema — nothing to guard
-      if (readIfExists(spark, fs, s"$out/$dir")
+      if (store.readIfExists(s"$out/$dir")
           .exists(d => !d.columns.contains(marker)))
         throw new IllegalStateException(
           s"$out/$dir was written by an older build (missing column " +
@@ -776,263 +750,16 @@ object Pipeline {
             "the schema change — crawl into a fresh outDir, or backfill " +
             s"the column into the existing $dir parquet first")
     }
-    val ckptDir = s"$out/ckpt"
-    val committed = lastCommittedBatch(fs, ckptDir)
-    def deltaDir(name: String) = s"$out/state/deltas/$name"
-    def deltasOf(name: String): Option[DataFrame] =
-      readIfExists(spark, fs, deltaDir(name)).map { d =>
-        committed.map(c => d.where(col("batch_id") <= c))
-          .getOrElse(d.limit(0))
-      }
-
-    val seenRef = new java.util.concurrent.atomic.AtomicReference({
-      val base = restoredV
-        .map(v => graft.dedup.UrlSeenSet.load(spark, s"$out/state/v$v/seen"))
-        .getOrElse(graft.dedup.UrlSeenSet.empty(spark))
-      deltasOf("seen") match {
-        case None => base
-        case Some(d) if !changeAware =>
-          graft.dedup.UrlSeenSet.extendWith(base, d)
-        case Some(d) =>
-          // change-aware deltas UPSERT: latest batch wins per URL pair.
-          // This merge costs one shuffle of the set — crash-recovery
-          // only; the committed path above is a plain parquet load.
-          graft.dedup.UrlSeenSet.Index(
-            base.hashes.withColumn("batch_id", lit(-1L))
-              .unionByName(d.select(
-                col("url_hash"), col("url_hash2"), col("content_hash"),
-                col("batch_id")))
-              .groupBy(col("url_hash"), col("url_hash2"))
-              .agg(max_by(col("content_hash"), col("batch_id"))
-                .as("content_hash")))
-      }
-    })
-    val emittedRef = new java.util.concurrent.atomic.AtomicReference({
-      val base = restoredV
-        .filter(v => fs.exists(
-          new org.apache.hadoop.fs.Path(s"$out/state/v$v/emitted")))
-        .map(v => graft.dedup.UrlSeenSet.load(spark, s"$out/state/v$v/emitted"))
-        .getOrElse(graft.dedup.UrlSeenSet.empty(spark))
-      deltasOf("emitted")
-        .map(d => graft.dedup.UrlSeenSet.extendWith(base, d))
-        .getOrElse(base)
-    })
-    val indexRef = new java.util.concurrent.atomic.AtomicReference({
-      val base = restoredV
-        .map(v => graft.dedup.MinHashDedup.loadIndex(spark, s"$out/state/v$v/index"))
-        .getOrElse {
-          val corpus = corpusPath
-            .map(p => spark.read.parquet(p)
-              .select(col("doc_id").cast("long"), col("text").cast("string")))
-            .getOrElse(spark.range(0)
-              .select(col("id").as("doc_id"), lit("").as("text")))
-          graft.dedup.MinHashDedup.buildIndex(corpus, "doc_id", "text")
-        }
-      (deltasOf("index_buckets"), deltasOf("index_sets"),
-        deltasOf("index_hashes")) match {
-        case (Some(b), Some(s), Some(h)) => base.copy(
-          buckets = base.buckets.unionByName(b.drop("batch_id")),
-          sets = base.sets.unionByName(s.drop("batch_id")),
-          textHashes = base.textHashes.unionByName(h.drop("batch_id")))
-        case _ => base
-      }
-    })
-    // robots bodies: --robots seed (lowest precedence) < committed
-    // state < deltas; resolved latest-fetch-wins per host
-    val robotsRef = new java.util.concurrent.atomic.AtomicReference({
-      val parts = Seq(
-        robotsPath.map(p => spark.read.parquet(p)
-          .select(col("host").cast("string"), col("body").cast("string"))
-          .withColumn("batch_id", lit(-2L))),
-        restoredV.flatMap(v => readIfExists(spark, fs, s"$out/state/v$v/robots"))
-          .map(_.select(col("host"), col("body"))
-            .withColumn("batch_id", lit(-1L))),
-        deltasOf("robots").map(_.select(col("host"), col("body"),
-          col("batch_id").cast("long")))
-      ).flatten
-      if (parts.isEmpty) Seq.empty[(String, String)].toDF("host", "body")
-      else parts.reduce(_ unionByName _)
-        .groupBy(col("host"))
-        .agg(max_by(col("body"), col("batch_id")).as("body"))
-        .localCheckpoint()
-    })
-    val sitemapsRef = new java.util.concurrent.atomic.AtomicReference({
-      val base = restoredV
-        .flatMap(v => readIfExists(spark, fs, s"$out/state/v$v/sitemaps"))
-        .getOrElse(Seq.empty[String].toDF("sitemap_url"))
-      deltasOf("sitemaps")
-        .map(d => base.unionByName(d.select("sitemap_url")).distinct())
-        .getOrElse(base)
-        .localCheckpoint()
-    })
-    val graphRef = new java.util.concurrent.atomic.AtomicReference({
-      val base = restoredV
-        .flatMap(v => readIfExists(spark, fs, s"$out/state/v$v/hostgraph"))
-        .getOrElse(Seq.empty[(String, String)].toDF("src", "dst"))
-      deltasOf("hostgraph")
-        .map(d => base.unionByName(d.select("src", "dst")))
-        .getOrElse(base)
-        .localCheckpoint()
-    })
-    // refresh-crawl schedule: one row per fetched URL — (url,
-    // last_fetch, last_hash, n_fetches, unchanged_streak, fail_streak,
-    // gone, retry_after), the rolling form of
-    // [[graft.sources.RecrawlSchedule]]. Deltas are per-drain
-    // observation logs (fetchlog = successes, faillog = 4xx/5xx refetch
-    // answers); the fold is ORDER-sensitive (the streaks), so crash
-    // recovery replays committed drains in batch order, successes
-    // before failures within a drain — the live loop's ordering.
-    // withFailureDefaults migrates a pre-failure-era committed state.
-    val schedRef = new java.util.concurrent.atomic.AtomicReference({
-      val base = graft.sources.RecrawlSchedule.withFailureDefaults(
-        restoredV
-          .flatMap(v => readIfExists(spark, fs, s"$out/state/v$v/recrawl"))
-          .getOrElse(graft.sources.RecrawlSchedule.emptyState(spark)))
-      val okLog = deltasOf("fetchlog").map(_.localCheckpoint())
-      val failLog = deltasOf("faillog").map(_.localCheckpoint())
-      if (okLog.isEmpty && failLog.isEmpty) base
-      else {
-        val bids = (okLog.toSeq ++ failLog.toSeq)
-          .map(_.select(col("batch_id")))
-          .reduce(_ unionByName _)
-          .distinct().orderBy(col("batch_id")).as[Long].collect()
-        bids.foldLeft(base) { (st, bid) =>
-          val s1 = okLog.map(d => graft.sources.RecrawlSchedule.advance(
-              st, d.where(col("batch_id") === bid), "url", "t", "h"))
-            .getOrElse(st)
-          failLog.map(d => graft.sources.RecrawlSchedule.advanceFailures(
-              s1, d.where(col("batch_id") === bid),
-              "url", "t", "status", "retry_after"))
-            .getOrElse(s1)
-            .localCheckpoint()
-        }
-      }
-    })
-    // conditional-request hints: the latest validators each URL's
-    // origin sent (`ETag` / `Last-Modified` from 200s and 304s),
-    // rolled latest-fetch-wins — joined onto refetch frontier rows so
-    // a fetcher can send If-None-Match / If-Modified-Since
-    val validatorsRef = new java.util.concurrent.atomic.AtomicReference({
-      val base = restoredV
-        .flatMap(v => readIfExists(spark, fs, s"$out/state/v$v/validators"))
-        .getOrElse(Seq.empty[(String, String, String)]
-          .toDF("url", "etag", "last_modified"))
-      deltasOf("validators") match {
-        case None => base
-        case Some(d) =>
-          base.withColumn("batch_id", lit(-1L))
-            .unionByName(d.select(col("url"), col("etag"),
-              col("last_modified"), col("batch_id").cast("long")))
-            .groupBy(col("url"))
-            .agg(max_by(col("etag"), col("batch_id")).as("etag"),
-              max_by(col("last_modified"), col("batch_id"))
-                .as("last_modified"))
-      }
-    })
-
-    // control-plane fetch ages (url, last_fetch): restored, then the
-    // committed drains' observation logs replayed in batch order
-    // (latest-wins upserts — replay order only matters across drains)
-    val controlRef = new java.util.concurrent.atomic.AtomicReference({
-      val base = restoredV
-        .flatMap(v => readIfExists(spark, fs, s"$out/state/v$v/control"))
-        .getOrElse(graft.sources.ControlPlane.emptyState(spark))
-      deltasOf("control") match {
-        case None => base
-        case Some(d) =>
-          val log = d.localCheckpoint()
-          val bids = log.select(col("batch_id")).distinct()
-            .orderBy(col("batch_id")).as[Long].collect()
-          bids.foldLeft(base) { (st, bid) =>
-            graft.sources.ControlPlane.observe(st,
-              log.where(col("batch_id") === bid), "url", bid.toDouble)
-              .localCheckpoint()
-          }
-      }
-    })
-
-    // robots server-error latch (host, err_since): restored, then the
-    // committed drains' answer logs replayed in batch order (the roll
-    // is order-sensitive: earliest error opens the window, any sub-500
-    // answer closes it)
-    val robotsErrRef = new java.util.concurrent.atomic.AtomicReference({
-      val base = restoredV
-        .flatMap(v => readIfExists(spark, fs, s"$out/state/v$v/robotserr"))
-        .getOrElse(Seq.empty[(String, Double)].toDF("host", "err_since"))
-      deltasOf("robotserr") match {
-        case None => base
-        case Some(d) =>
-          val log = d.localCheckpoint()
-          val bids = log.select(col("batch_id")).distinct()
-            .orderBy(col("batch_id")).as[Long].collect()
-          bids.foldLeft(base) { (st, bid) =>
-            graft.sources.RobotsTxt.rollErrors(st,
-              log.where(col("batch_id") === bid)
-                .select(col("host"), col("status")),
-              bid.toDouble).localCheckpoint()
-          }
-      }
-    })
-
-    // rules + delays derived from the rolled robots state; re-derived
-    // only on drains that actually carried robots fetches
-    def deriveRobots(robots: DataFrame): (DataFrame, DataFrame) = (
-      graft.sources.RobotsTxt.parseRules(robots, "host", "body")
-        .localCheckpoint(),
-      graft.sources.RobotsTxt.delayFor(
-        graft.sources.RobotsTxt.parseDelays(robots, "host", "body"), agent)
-        .localCheckpoint())
-    val (rules0, delays0) = deriveRobots(robotsRef.get)
-    val rulesRef = new java.util.concurrent.atomic.AtomicReference(rules0)
-    val delaysRef = new java.util.concurrent.atomic.AtomicReference(delays0)
-    // the rules every gate actually consults THIS drain: the parsed
-    // rules, wrapped by the server-error complete-disallow once a
-    // host's 5xx window expires — refreshed at the top of each drain
-    // (the latch depends on the drain clock, not on robots fetches)
-    val effRulesRef = new java.util.concurrent.atomic.AtomicReference(rules0)
+    val state = new java.util.concurrent.atomic.AtomicReference(store.restore())
+    def advance[A, D](p: graft.sources.CrawlState.Piece[A, D], d: D,
+        batchId: Option[Long]): Unit =
+      state.set(store.advance(state.get, p, d, batchId))
 
     def domainKill(df: DataFrame, uriCol: String): DataFrame =
       if (blocked0.isEmpty) df
       else preparedPsl
         .map(p => graft.sources.Domains.filterBlocked(df, uriCol, blocked0, p))
         .getOrElse(graft.sources.Domains.filterBlocked(df, uriCol, blocked0))
-
-    /** PageRank over the accumulated host link graph → (host, rank):
-      * the frontier's crawl-value priority. Host-level, so the graph
-      * is orders of magnitude smaller than the frontier — but still
-      * STATE, and state is scanned, never shuffled, on ordinary
-      * drains: this recompute runs only on the CompactionPolicy
-      * cadence (and at bootstrap), its result held in [[ranksRef]]
-      * and persisted beside the host graph (r16 verdict #3 — a
-      * per-drain recompute is state-proportional work that grows with
-      * crawl history, not batch size). Rank staleness is bounded by
-      * the cadence: ≤ compactEvery drains.
-      */
-    def hostRanks(): DataFrame = {
-      val g = graphRef.get.distinct().localCheckpoint()
-      if (g.isEmpty) Seq.empty[(String, Double)].toDF("host", "rank")
-      else {
-        val dim = g.select(col("src").as("host"))
-          .unionByName(g.select(col("dst").as("host")))
-          .distinct()
-          .withColumn("id", xxhash64(col("host")))
-          .localCheckpoint()
-        graft.operators.PageRank.run(
-          g.select(xxhash64(col("src")).as("src"),
-            xxhash64(col("dst")).as("dst")), rankIters)
-          .join(dim, Seq("id"))
-          .select(col("host"), col("rank"))
-      }
-    }
-    // durable rank state: restored from the committed version when
-    // present (a scan — no graph shuffle at startup), else one
-    // bootstrap compute over the restored graph
-    val ranksRef = new java.util.concurrent.atomic.AtomicReference(
-      restoredV
-        .flatMap(v => readIfExists(spark, fs, s"$out/state/v$v/hostranks"))
-        .map(_.select(col("host"), col("rank")))
-        .getOrElse(hostRanks())
-        .localCheckpoint())
 
     /** FRONTIER assembly from outlinks + redirect targets + sitemap
       * seeds: canonicalize → fetchable schemes → the SAME gates fetched
@@ -1064,9 +791,8 @@ object Pipeline {
         .where(col("src").isNotNull && col("dst").isNotNull &&
           col("src") =!= col("dst"))
         .distinct().localCheckpoint()
-      batchId.foreach(b => graft.streaming.ExactlyOnce.appendKeyed(
-        batchEdges, deltaDir("hostgraph"), b))
-      graphRef.set(graphRef.get.unionByName(batchEdges).localCheckpoint())
+      advance(store.HostGraph, batchEdges, batchId)
+      val st = state.get
 
       // per-URL priority TIER beside the host rank: provenance is a
       // crawl-value signal the loop already has — a sitemap-advertised
@@ -1083,10 +809,10 @@ object Pipeline {
         .groupBy(col("target")).agg(max(col("__tier")).as("__tier"))
       val domKept = domainKill(targets, "target")
       val robKept = graft.sources.RobotsTxt.filterAllowed(
-        domKept, "target", effRulesRef.get, agent)
-      val unseen = graft.dedup.UrlSeenSet.filterNew(robKept, "target", seenRef.get)
+        domKept, "target", st.effRules, agent)
+      val unseen = graft.dedup.UrlSeenSet.filterNew(robKept, "target", st.seen)
       val unEmitted = graft.dedup.UrlSeenSet.filterNew(
-        unseen, "target", emittedRef.get)
+        unseen, "target", st.emitted)
       // REFETCH pool: URLs whose refresh schedule says they're due,
       // re-checked against the CURRENT domain/robots gates (both may
       // have changed since the original fetch) and emitted once per
@@ -1101,7 +827,7 @@ object Pipeline {
         .withColumn("__ctl", lit(false))
       val withDue =
         if (recrawlBase > 0 && batchId.isDefined) {
-          val due = graft.sources.RecrawlSchedule.due(schedRef.get,
+          val due = graft.sources.RecrawlSchedule.due(st.recrawl,
             batchId.get.toDouble, recrawlBase.toDouble, recrawlMax.toDouble)
             .select(col("url").as("target"),
               concat(col("url"), lit("#"),
@@ -1109,13 +835,13 @@ object Pipeline {
               lit(0.0).as("__tier"))
           val dueDom = domainKill(due, "target")
           val dueRob = graft.sources.RobotsTxt.filterAllowed(
-            dueDom, "target", effRulesRef.get, agent)
+            dueDom, "target", st.effRules, agent)
           val dueNew = graft.dedup.UrlSeenSet.filterNew(
-            dueRob, "__ekey", emittedRef.get).localCheckpoint()
+            dueRob, "__ekey", st.emitted).localCheckpoint()
           // conditional-request hints for the refetch rows: validator
           // state scanned once (due keys broadcast into the semi
           // join), then two small-side joins
-          val hints = validatorsRef.get.join(
+          val hints = st.validators.join(
             broadcast(dueNew.select(col("target").as("__u"))),
             col("url") === col("__u"), "left_semi")
           val hinted = dueNew.join(broadcast(hints),
@@ -1144,7 +870,7 @@ object Pipeline {
         if (controlRefresh > 0 && batchId.isDefined) {
           val ctl = domainKill(controlTargets, "target")
           val ctlNew = graft.dedup.UrlSeenSet.filterNew(
-              ctl, "__ekey", emittedRef.get)
+              ctl, "__ekey", st.emitted)
             .withColumn("etag", lit(null).cast("string"))
             .withColumn("last_modified", lit(null).cast("string"))
             .select(col("target"), col("__ekey"), col("__tier"),
@@ -1157,11 +883,11 @@ object Pipeline {
       // rank lookup without shuffling the rank STATE: the pool's host
       // set (batch-sized) broadcasts into a semi join that filters the
       // scanned state down to batch-relevant rows, which then broadcast
-      // back onto the pool — the validatorsRef shape
+      // back onto the pool — the validator-hints shape
       val pooled = pool
         .withColumn("__thost", graft.sources.UrlOps.host(col("target")))
         .localCheckpoint()
-      val relevantRanks = ranksRef.get.join(
+      val relevantRanks = st.hostRanks.join(
           broadcast(pooled.select(col("__thost").as("__h")).distinct()),
           col("host") === col("__h"), "left_semi")
         .select(col("host").as("__rhost"), col("rank").as("__rank"))
@@ -1172,81 +898,63 @@ object Pipeline {
           coalesce(col("__rank"), lit(0.0)) + col("__tier"))
         .drop("__thost", "__rhost", "__rank")
       val capped = graft.sources.CrawlBudget.cap(prioritized, "target",
-        delaysRef.get, horizon, defaultDelay,
+        st.delays, horizon, defaultDelay,
         priorityCol = Some("__priority"))
         .drop("__priority", "__tier")
         .localCheckpoint()
       val emDelta = graft.dedup.UrlSeenSet.deltaRows(capped, "__ekey")
-      batchId.foreach(b => graft.streaming.ExactlyOnce.appendKeyed(
-        emDelta, deltaDir("emitted"), b))
-      emittedRef.set(graft.dedup.UrlSeenSet.extendWith(emittedRef.get, emDelta))
+      advance(store.Emitted, emDelta, batchId)
       capped
     }
 
     def stageCounts(recs0: DataFrame, batchId: Option[Long])
-        : (Array[Long], DataFrame, DataFrame, DataFrame, DataFrame) = {
+        : (DrainCounts, DataFrame, DataFrame, DataFrame, DataFrame) = {
       // one drained batch of RECORDS through the full loop; returns
       // (per-stage counts, survivors, frontier, redirect aliases,
       // non-HTML assets). batchId = None is the dry run: no delta
       // writes.
       val recs = recs0.localCheckpoint()
 
-      // Stage counts ride the stage materialization jobs via
-      // Dataset.observe (one CollectMetrics node per counted level; a
-      // provably-empty stage is optimizer-eliminated with its node, so
-      // absent metrics read as 0) — the loop used to pay one extra
-      // count action per stage, a second full pass over a drop-sized
-      // frame at crawl scale.
-      def counted(df: DataFrame, o: org.apache.spark.sql.Observation): DataFrame =
-        df.observe(o, count(lit(1)).as("n"))
-      def obsN(o: org.apache.spark.sql.Observation): Long =
-        o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-      def newObs() = org.apache.spark.sql.Observation()
+      // Stage counts ride the stage materialization jobs (Durable's
+      // RowCount: one CollectMetrics node per counted level), never a
+      // count action — a second full pass over a drop-sized frame.
+      import graft.core.Durable.{RowCount, materializeCounted}
 
       // self-hosted robots: roll this drain's /robots.txt fetches
-      val obsRobFetch = newObs()
-      val robFetches = counted(graft.sources.RobotsTxt.fetchesIn(recs), obsRobFetch)
-        .localCheckpoint()
-      val nRobFetch = obsN(obsRobFetch)
+      val (robFetches, nRobFetch) =
+        materializeCounted(graft.sources.RobotsTxt.fetchesIn(recs))
       if (nRobFetch > 0) {
-        batchId.foreach(b => graft.streaming.ExactlyOnce.appendKeyed(
-          robFetches, deltaDir("robots"), b))
-        robotsRef.set(graft.sources.RobotsTxt.rollBodies(
-          robotsRef.get, robFetches).localCheckpoint())
-        val (r, d) = deriveRobots(robotsRef.get)
-        rulesRef.set(r); delaysRef.set(d)
+        advance(store.Robots, robFetches, batchId)
+        state.set(store.rederived(state.get))
       }
       // RFC 9309 server-error latch: every robots ANSWER (any status)
       // rolls the per-host error state — a 5xx opens the cached
       // window, a sub-500 answer closes it; once a host's window
       // expires the effective rules gate it to complete disallow
       if (robotsErrWindow > 0) {
-        val obsAns = newObs()
-        val robAnswers = counted(graft.sources.RobotsTxt.answersIn(recs), obsAns)
-          .localCheckpoint()
-        if (obsN(obsAns) > 0L) {
-          batchId.foreach(b => graft.streaming.ExactlyOnce.appendKeyed(
-            robAnswers, deltaDir("robotserr"), b))
-          robotsErrRef.set(graft.sources.RobotsTxt.rollErrors(
-            robotsErrRef.get, robAnswers,
-            batchId.getOrElse(0L).toDouble).localCheckpoint())
-        }
+        val (robAnswers, nAnswers) =
+          materializeCounted(graft.sources.RobotsTxt.answersIn(recs))
+        if (nAnswers > 0L) advance(store.RobotsErr, robAnswers, batchId)
       }
-      val errSt = robotsErrRef.get
-      effRulesRef.set(
+      // the rules every gate actually consults THIS drain: the parsed
+      // rules, wrapped by the server-error complete-disallow once a
+      // host's 5xx window expires — refreshed at the top of each drain
+      // (the latch depends on the drain clock, not on robots fetches)
+      val errSt = state.get.robotsErr
+      state.set(state.get.copy(effRules =
         if (robotsErrWindow > 0 && !errSt.isEmpty)
-          graft.sources.RobotsTxt.withErrorDisallow(rulesRef.get, errSt,
+          graft.sources.RobotsTxt.withErrorDisallow(state.get.rules, errSt,
             batchId.getOrElse(0L).toDouble, robotsErrWindow.toDouble)
             .localCheckpoint()
-        else rulesRef.get)
+        else state.get.rules))
 
       // sitemaps: advertised by the rolled robots state + children
       // discovered from earlier sitemap-index fetches
       val advertised = graft.sources.RobotsTxt.sitemapRefs(
-        robotsRef.get, "host", "body")
+        state.get.robots, "host", "body")
         .select(graft.sources.UrlOps.canonicalize(col("sitemap_url"))
           .as("sitemap_url"))
-      val known = advertised.unionByName(sitemapsRef.get)
+      val known = advertised.unionByName(state.get.sitemaps)
         .distinct().localCheckpoint()
       // revisit records (WARC-Type: revisit — the fetcher's own
       // URL-level dedup: the capture was byte-identical to an earlier
@@ -1272,21 +980,12 @@ object Pipeline {
         .localCheckpoint()
       val children = locs.where(col("is_index"))
         .select(col("loc").as("sitemap_url")).distinct()
-      val obsChildren = newObs()
-      val newChildren = counted(children
-          .join(sitemapsRef.get.select(col("sitemap_url").as("__e")),
-            col("sitemap_url") === col("__e"), "left_anti"), obsChildren)
-        .localCheckpoint()
-      if (obsN(obsChildren) > 0L) {
-        batchId.foreach(b => graft.streaming.ExactlyOnce.appendKeyed(
-          newChildren, deltaDir("sitemaps"), b))
-        sitemapsRef.set(sitemapsRef.get.unionByName(newChildren)
-          .localCheckpoint())
-      }
-      val obsSeeds = newObs()
-      val pageSeeds = counted(locs.where(!col("is_index"))
-        .select(col("loc").as("target")).distinct(), obsSeeds).localCheckpoint()
-      val nSeeds = obsN(obsSeeds)
+      val (newChildren, nChildren) = materializeCounted(children
+        .join(state.get.sitemaps.select(col("sitemap_url").as("__e")),
+          col("sitemap_url") === col("__e"), "left_anti"))
+      if (nChildren > 0L) advance(store.Sitemaps, newChildren, batchId)
+      val (pageSeeds, nSeeds) = materializeCounted(locs.where(!col("is_index"))
+        .select(col("loc").as("target")).distinct())
       // sitemaps themselves are fetch targets (advertised ones every
       // drain — the EMITTED seen-set downstream keeps each a one-time
       // emission; children once, on discovery)
@@ -1297,8 +996,7 @@ object Pipeline {
       // answers (any status — an answer proves the ask worked), then
       // re-ask for the stale ones through the frontier so the rolled
       // robots state and seed set can never silently age out
-      val pathOf = regexp_extract(col("target_uri"),
-        "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)", 1)
+      val pathOf = graft.sources.UrlOps.path(col("target_uri"))
       val drainT = batchId.getOrElse(0L).toDouble
       if (controlRefresh > 0) {
         val robotsFetched = recs
@@ -1308,20 +1006,14 @@ object Pipeline {
           .select(uriCanon.as("url"))
           .join(broadcast(known.select(col("sitemap_url").as("__k"))),
             col("url") === col("__k"), "left_semi")
-        val obsCtl = newObs()
-        val ctlFetched = counted(robotsFetched.unionByName(smFetched)
-          .distinct(), obsCtl).localCheckpoint()
-        if (obsN(obsCtl) > 0L) {
-          batchId.foreach(b => graft.streaming.ExactlyOnce.appendKeyed(
-            ctlFetched, deltaDir("control"), b))
-          controlRef.set(graft.sources.ControlPlane.observe(
-            controlRef.get, ctlFetched, "url", drainT).localCheckpoint())
-        }
+        val (ctlFetched, nCtlFetched) =
+          materializeCounted(robotsFetched.unionByName(smFetched).distinct())
+        if (nCtlFetched > 0L) advance(store.Control, ctlFetched, batchId)
       }
       val ctlTargets =
         if (controlRefresh > 0 && batchId.isDefined)
           graft.sources.ControlPlane.due(
-              controlRef.get, drainT, controlRefresh.toDouble)
+              state.get.control, drainT, controlRefresh.toDouble)
             .select(col("url").as("target"),
               concat(col("url"), lit("#"),
                 col("last_fetch").cast("long").cast("string")).as("__ekey"),
@@ -1330,10 +1022,8 @@ object Pipeline {
           .toDF("target", "__ekey", "__tier", "__ctl")
 
       // redirects: frontier edges + canonical-alias chains
-      val obsRedir = newObs()
-      val redirEdges = counted(graft.sources.RedirectEdges.edges(recs), obsRedir)
-        .localCheckpoint()
-      val nRedir = obsN(obsRedir)
+      val (redirEdges, nRedir) =
+        materializeCounted(graft.sources.RedirectEdges.edges(recs))
       val aliases = graft.sources.RedirectEdges
         .resolveChains(redirEdges, maxHops).localCheckpoint()
       // frontier targets are the chain-resolved FINAL destinations:
@@ -1369,19 +1059,16 @@ object Pipeline {
       // the assets route obeys the SAME policy surfaces as the page
       // route (r16 ADVICE): a blocked domain's or robots-disallowed
       // PDF must not reach the multimodal hand-off either
-      val obsAssets = newObs()
-      val assets = counted(graft.sources.RobotsTxt.filterAllowed(
+      val (assets, nAssets) = materializeCounted(graft.sources.RobotsTxt.filterAllowed(
           domainKill(nonControl.where(!extractable), "target_uri"),
-          "target_uri", effRulesRef.get, agent)
+          "target_uri", state.get.effRules, agent)
         .select(col("target_uri").as("uri"),
           col("http_content_type").as("media_type"),
           length(col("body")).cast("long").as("n_bytes"),
           when(col("http_content_encoding").isNotNull,
             concat(lit("unsupported-encoding:"),
               col("http_content_encoding")))
-            .otherwise(lit("media-type")).as("reason")), obsAssets)
-        .localCheckpoint()
-      val nAssets = obsN(obsAssets)
+            .otherwise(lit("media-type")).as("reason")))
       // URL-level policy gates FIRST — the domain blocklist and the
       // robots verdict read nothing but the URI, so they run on the
       // raw page rows and extraction pays only for the SURVIVORS: at
@@ -1396,18 +1083,16 @@ object Pipeline {
       // materializes the gated+extracted frame below (per-gate
       // CollectMetrics nodes — filters cannot push through an observe,
       // so each count stays exact at its gate level)
-      val obsBatch = newObs()
-      val obsDom = newObs()
-      val obsRob = newObs()
-      val pages = counted(nonControl.where(extractable)
+      val Seq(obsBatch, obsDom, obsRob) = Seq.fill(3)(new RowCount)
+      val pages = obsBatch.on(nonControl.where(extractable)
         .select(xxhash64(col("record_id")).as("doc_id"),
           col("target_uri").as("uri"),
           col("http_x_robots_tag").as("__xrt"),
           col("body"),
-          coalesce(col("http_charset"), lit("")).as("__cs")), obsBatch)
-      val domKept = counted(domainKill(pages, "uri"), obsDom)
+          coalesce(col("http_charset"), lit("")).as("__cs")))
+      val domKept = obsDom.on(domainKill(pages, "uri"))
       val robKeptRaw = graft.sources.RobotsTxt.filterAllowed(
-        domKept, "uri", effRulesRef.get, agent)
+        domKept, "uri", state.get.effRules, agent)
       // charset-aware decode (NOT cast-as-UTF-8) on the gate
       // survivors only: the Content-Type charset drives the byte
       // decode per row; absent/unknown labels fall back to UTF-8,
@@ -1426,18 +1111,16 @@ object Pipeline {
         coalesce(graft.sources.HtmlLinks.scopedDirectives(
           col("__xrt"), agent), lit("")),
         coalesce(graft.sources.HtmlLinks.metaRobots(col("html")), lit("")))
-      val robKept = counted(withHtml
+      val robKept = obsRob.on(withHtml
         .withColumn("text", call_function("graft_html_text",
           col("html"), lit(minChars), lit(maxLinkPct)))
         .withColumn("__noindex",
           graft.sources.HtmlLinks.hasRobotsDirective(pageDirs, "noindex"))
         .withColumn("__nofollow",
           graft.sources.HtmlLinks.hasRobotsDirective(pageDirs, "nofollow"))
-        .drop("__xrt", "body", "__cs"), obsRob)
+        .drop("__xrt", "body", "__cs"))
         .localCheckpoint()
-      val nBatch = obsN(obsBatch)
-      val nDom = obsN(obsDom)
-      val nRob = obsN(obsRob)
+      val (nBatch, nDom, nRob) = (obsBatch.n, obsDom.n, obsRob.n)
       // `rel=canonical` aliases — the HTML-declared twin of the 3xx
       // chain (CMSes stamp it on every URL variant; on large sites it
       // outnumbers redirect aliases). Harvested post-policy-gates; a
@@ -1455,16 +1138,12 @@ object Pipeline {
           graft.sources.HtmlLinks.effectiveBase(col("uri"), col("html"))
             .as("__base"))
         .localCheckpoint()
-      val obsCanon = newObs()
-      val canonPairs = counted(canonRaw.select(col("src"),
+      val (canonPairs, nCanon) = materializeCounted(canonRaw.select(col("src"),
           graft.sources.UrlOps.canonicalize(
             graft.sources.HtmlLinks.resolve(col("__base"), col("__raw")))
             .as("final_dst"))
         .where(col("final_dst").isNotNull &&
-          col("final_dst") =!= graft.sources.UrlOps.canonicalize(col("src"))),
-        obsCanon)
-        .localCheckpoint()
-      val nCanon = obsN(obsCanon)
+          col("final_dst") =!= graft.sources.UrlOps.canonicalize(col("src"))))
       val allAliases = aliases.withColumn("kind", lit("redirect"))
         .unionByName(canonPairs.withColumn("hops", lit(1))
           .withColumn("kind", lit("canonical"))
@@ -1473,29 +1152,22 @@ object Pipeline {
       // canonical-dedup and novelty counts ride the ONE job that
       // materializes `fresh` (the intermediate urlDeduped frame is
       // consumed exactly once, by the novelty anti-join)
-      val obsUrl = newObs()
-      val obsNew = newObs()
-      val urlDeduped = counted(graft.dedup.ExactDedup.keepFirst(
+      val Seq(obsUrl, obsNew) = Seq.fill(2)(new RowCount)
+      val urlDeduped = obsUrl.on(graft.dedup.ExactDedup.keepFirst(
         robKept.withColumn("canon",
           graft.sources.UrlOps.canonicalize(col("uri"))),
-        Seq("canon"), Seq(col("uri"))), obsUrl)
-      val fresh = counted(
-        (if (changeAware)
-          graft.dedup.UrlSeenSet.filterNew(urlDeduped, "canon", "text", seenRef.get)
+        Seq("canon"), Seq(col("uri"))))
+      val fresh = obsNew.on(
+        if (changeAware)
+          graft.dedup.UrlSeenSet.filterNew(urlDeduped, "canon", "text", state.get.seen)
         else
-          graft.dedup.UrlSeenSet.filterNew(urlDeduped, "canon", seenRef.get)),
-        obsNew)
+          graft.dedup.UrlSeenSet.filterNew(urlDeduped, "canon", state.get.seen))
           .localCheckpoint()
-      val nUrl = obsN(obsUrl)
-      val nNew = obsN(obsNew)
+      val (nUrl, nNew) = (obsUrl.n, obsNew.n)
       val seenDelta =
         if (changeAware) graft.dedup.UrlSeenSet.deltaRows(fresh, "canon", "text")
         else graft.dedup.UrlSeenSet.deltaRows(fresh, "canon")
-      batchId.foreach(bid => graft.streaming.ExactlyOnce.appendKeyed(
-        seenDelta, deltaDir("seen"), bid))
-      seenRef.set(
-        if (changeAware) graft.dedup.UrlSeenSet.upsertWith(seenRef.get, seenDelta)
-        else graft.dedup.UrlSeenSet.extendWith(seenRef.get, seenDelta))
+      advance(store.Seen, seenDelta, batchId)
       // refresh-crawl bookkeeping: EVERY fetch observation advances
       // the rolling schedule — the drain's 200s post-URL-dedup
       // (changed or not: an unchanged refetch grows the streak), plus
@@ -1515,7 +1187,7 @@ object Pipeline {
             .join(broadcast(fetchObs.select(col("url").as("__f"))),
               col("url") === col("__f"), "left_anti")
             .select(col("url"))
-          val confirms = schedRef.get
+          val confirms = state.get.recrawl
             .join(broadcast(notMod), Seq("url"))
             .select(col("url"), col("last_hash").as("h"))
           val obs = fetchObs.unionByName(confirms)
@@ -1560,23 +1232,12 @@ object Pipeline {
             .withColumn("t", lit(batchId.getOrElse(0L).toDouble))
             .select(col("url"), col("t"), col("status"), col("retry_after"))
             .localCheckpoint()
-          batchId.foreach { bid =>
-            graft.streaming.ExactlyOnce.appendKeyed(
-              obs, deltaDir("fetchlog"), bid)
-            graft.streaming.ExactlyOnce.appendKeyed(
-              fails, deltaDir("faillog"), bid)
-            schedRef.set(graft.sources.RecrawlSchedule.advanceFailures(
-              graft.sources.RecrawlSchedule.advance(
-                schedRef.get, obs, "url", "t", "h"),
-              fails, "url", "t", "status", "retry_after")
-              .localCheckpoint())
-          }
+          batchId.foreach(bid =>
+            advance(store.Recrawl, (obs, fails), Some(bid)))
           (confirms.count(), fails.count())
         } else (0L, 0L)
       // validator-hint roll: one row per URL per drain (an origin that
-      // sent ETag/Last-Modified on a 200 or re-sent them on a 304);
-      // the state side is only scanned (batch broadcast into the
-      // anti join), latest drain wins per URL
+      // sent ETag/Last-Modified on a 200 or re-sent them on a 304)
       if (recrawlBase > 0) {
         val valRows = recs.where(col("warc_type") === "response" &&
             (col("http_status") === 200 || col("http_status") === 304) &&
@@ -1586,24 +1247,14 @@ object Pipeline {
           .agg(max(col("http_etag")).as("etag"),
             max(col("http_last_modified")).as("last_modified"))
           .localCheckpoint()
-        if (!valRows.isEmpty) {
-          batchId.foreach { bid =>
-            graft.streaming.ExactlyOnce.appendKeyed(
-              valRows, deltaDir("validators"), bid)
-            validatorsRef.set(validatorsRef.get
-              .join(broadcast(valRows.select(col("url").as("__v"))),
-                col("url") === col("__v"), "left_anti")
-              .unionByName(valRows).localCheckpoint())
-          }
-        }
+        if (!valRows.isEmpty)
+          batchId.foreach(bid => advance(store.Validators, valRows, Some(bid)))
       }
       // noindex pages never enter the ingest cycle (they must not
       // reach the corpus OR the dedup index), but they already
       // advanced the schedule and the seen-set above
-      val obsIdxable = newObs()
-      val indexable = counted(fresh.where(!col("__noindex")), obsIdxable)
-        .localCheckpoint()
-      val nNoindex = nNew - obsN(obsIdxable)
+      val (indexable, nIndexable) = materializeCounted(fresh.where(!col("__noindex")))
+      val nNoindex = nNew - nIndexable
       val (surv, c) =
         if (nNew > nNoindex) {
           // the extension rides the cycle's probe index (the survivors
@@ -1611,19 +1262,11 @@ object Pipeline {
           // persisted below and unioned into the live index
           val (sv, cc, add) = graft.dedup.IncrementalIngest
             .cycleWithExtension(
-              indexRef.get,
+              state.get.index,
               indexable.select(col("doc_id"), col("uri"), col("text"),
                 col("html"), col("__nofollow")),
               "doc_id", "text")
-          batchId.foreach { bid =>
-            graft.streaming.ExactlyOnce.appendKeyed(
-              add.buckets, deltaDir("index_buckets"), bid)
-            graft.streaming.ExactlyOnce.appendKeyed(
-              add.sets, deltaDir("index_sets"), bid)
-            graft.streaming.ExactlyOnce.appendKeyed(
-              add.textHashes, deltaDir("index_hashes"), bid)
-          }
-          indexRef.set(graft.dedup.MinHashDedup.extendWith(indexRef.get, add))
+          advance(store.Index, add, batchId)
           (sv, cc)
         } else
           (fresh.limit(0), Array(0L, 0L, 0L, 0L))
@@ -1649,7 +1292,7 @@ object Pipeline {
       val nRefetch = frontier.where(col("__ekey") =!= col("target") &&
         !col("__ctl")).count()
       val nControl = frontier.where(col("__ctl")).count()
-      (Array(nBatch, nDom, nRob, nUrl, nNew, c(1), c(2), c(3),
+      (DrainCounts(nBatch, nDom, nRob, nUrl, nNew, c(1), c(2), c(3),
         frontier.count(), nRedir, nRobFetch, nSeeds, nNotMod, nRefetch,
         nAssets, nFailed, nCanon, nNoindex, nControl),
         surv, frontier, allAliases, assets)
@@ -1665,14 +1308,10 @@ object Pipeline {
     if (args.dryRun) {
       val (c, _, _, _, _) = stageCounts(
         records(graft.sources.WarcShards.readRecords(spark, inDir)), None)
-      println(s"batch=${c(0)} after_domain=${c(1)} after_robots=${c(2)} " +
-        s"after_url=${c(3)} new_url=${c(4)} after_exact=${c(5)} " +
-        s"after_intra=${c(6)} survivors=${c(7)} frontier=${c(8)} " +
-        s"redirects=${c(9)} robots_fetches=${c(10)} sitemap_seeds=${c(11)} " +
-        s"not_modified=${c(12)} refetch_emitted=${c(13)} assets=${c(14)} " +
-        s"failed=${c(15)} canonical=${c(16)} noindex=${c(17)} " +
-        s"control=${c(18)} (dry run — nothing written)")
-      return CrawlOutcome("(dry-run)", "success", 0L, c(7), restoredV, None)
+      println(c.productElementNames.zip(c.productIterator)
+        .map { case (k, v) => s"${k.stripPrefix("n_")}=$v" }
+        .mkString("", " ", " (dry run — nothing written)"))
+      return CrawlOutcome("(dry-run)", "success", 0L, c.n_survivors, restoredV, None)
     }
 
     val jobId = mintJobId()
@@ -1701,42 +1340,15 @@ object Pipeline {
             import sp.implicits._
             val (c, surv, frontier, aliases, assets) =
               stageCounts(batch0, Some(batchId))
-            graft.streaming.ExactlyOnce.appendKeyed(
-              surv.select(col("doc_id"), col("uri"), col("text")),
-              s"$out/docs", batchId)
-            graft.streaming.ExactlyOnce.appendKeyed(
-              frontier.select(col("target"), col("etag"),
-                col("last_modified")),
-              s"$out/frontier", batchId)
-            graft.streaming.ExactlyOnce.appendKeyed(
-              aliases, s"$out/aliases", batchId)
-            graft.streaming.ExactlyOnce.appendKeyed(
-              assets, s"$out/assets", batchId)
-            graft.streaming.ExactlyOnce.appendKeyed(
-              Seq((batchId, c(0), c(1), c(2), c(3), c(4), c(5), c(6), c(7),
-                c(8), c(9), c(10), c(11), c(12), c(13), c(14), c(15), c(16),
-                c(17), c(18)))
-                .toDF("batch_id", "n_batch", "n_after_domain", "n_after_robots",
-                  "n_after_url", "n_new_url", "n_after_exact", "n_after_intra",
-                  "n_survivors", "n_frontier", "n_redirects",
-                  "n_robots_fetches", "n_sitemap_seeds", "n_not_modified",
-                  "n_refetch", "n_assets", "n_failed", "n_canonical",
-                  "n_noindex", "n_control"),
-              s"$out/drains", batchId)
+            for ((dir, df) <- Seq(
+                "docs" -> surv.select(col("doc_id"), col("uri"), col("text")),
+                "frontier" -> frontier.select(col("target"), col("etag"), col("last_modified")),
+                "aliases" -> aliases, "assets" -> assets,
+                "drains" -> Seq(c).toDF().select(lit(batchId).as("batch_id"), col("*"))))
+              graft.streaming.ExactlyOnce.appendKeyed(df, s"$out/$dir", batchId)
             drains.incrementAndGet(): Unit
-            ingested.addAndGet(c(7)): Unit
-            // in-loop maintenance: epoch compaction bounds index lineage
-            // on long drains; the canonical commit happens at run end
-            indexRef.set(policy.maybe(batchId, indexRef.get)(
-              graft.dedup.MinHashDedup.compactIndex(_,
-                s"$out/state/epoch_$batchId/index")))
-            seenRef.set(policy.maybe(batchId, seenRef.get)(
-              graft.dedup.UrlSeenSet.compact(_,
-                s"$out/state/epoch_$batchId/seen")))
-            // host ranks refresh on the same cadence — the one graph
-            // shuffle the loop performs, amortized over K drains
-            ranksRef.set(policy.maybe(batchId, ranksRef.get)(_ =>
-              hostRanks().localCheckpoint()))
+            ingested.addAndGet(c.n_survivors): Unit
+            state.set(store.maintain(state.get, batchId, policy))
           }
         }
         .option("checkpointLocation", ckptDir)
@@ -1744,32 +1356,7 @@ object Pipeline {
         .start()
       q.awaitTermination()
 
-      // commit durable state v<N+1>, then reap v<N>, the deltas, and
-      // the epoch dirs
-      val nextV = restoredV.map(_ + 1).getOrElse(0)
-      val vdir = s"$out/state/v$nextV"
-      graft.dedup.UrlSeenSet.compact(seenRef.get, s"$vdir/seen"): Unit
-      graft.dedup.MinHashDedup.compactIndex(indexRef.get, s"$vdir/index"): Unit
-      graft.dedup.UrlSeenSet.compact(emittedRef.get, s"$vdir/emitted"): Unit
-      robotsRef.get.write.mode("overwrite").parquet(s"$vdir/robots")
-      sitemapsRef.get.distinct().write.mode("overwrite")
-        .parquet(s"$vdir/sitemaps")
-      graphRef.get.distinct().write.mode("overwrite")
-        .parquet(s"$vdir/hostgraph")
-      ranksRef.get.write.mode("overwrite").parquet(s"$vdir/hostranks")
-      schedRef.get.write.mode("overwrite").parquet(s"$vdir/recrawl")
-      validatorsRef.get.write.mode("overwrite").parquet(s"$vdir/validators")
-      robotsErrRef.get.write.mode("overwrite").parquet(s"$vdir/robotserr")
-      controlRef.get.write.mode("overwrite").parquet(s"$vdir/control")
-      fs.create(new org.apache.hadoop.fs.Path(s"$vdir/_COMMITTED"), true).close()
-      restoredV.foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$out/state/v$v"), true): Unit
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(s"$out/state/deltas"), true): Unit
-      if (fs.exists(statePath)) fs.listStatus(statePath).foreach { st =>
-        if (st.getPath.getName.startsWith("epoch_"))
-          fs.delete(st.getPath, true): Unit
-      }
+      val nextV = store.commit(state.get)
 
       val duration = (System.nanoTime() - t0) / 1e9
       ledger.completeJob(jobId, Map(
@@ -1792,11 +1379,7 @@ object Pipeline {
   }
 
   private def crawlMain(args: Array[String]): Unit = {
-    val usage = "usage: Pipeline crawl <inDir> <outDir> [--agent NAME] " +
-      "[--blocked-domains d1,d2] [--robots PARQUET] [--corpus PARQUET] " +
-      "[--psl PARQUET] [--change-aware] [--files-per-drain N] " +
-      "[--compact-every K] [--recrawl-base N] [--recrawl-max N] " +
-      "[--control-refresh N] [--dry-run]"
+    val usage = s"usage: ${Usage.crawl}"
     require(args.length >= 2 && !args(0).startsWith("-") && !args(1).startsWith("-"),
       usage)
     val parsed =
@@ -1816,9 +1399,7 @@ object Pipeline {
   }
 
   private def curateMain(args: Array[String]): Unit = {
-    val usage = "usage: Pipeline curate <inPath> <outDir> [--min-quality X] " +
-      "[--sample F] [--max-tokens N] [--format parquet|tar] [--shards N] " +
-      "[--blocked-domains d1,d2] [--dry-run]"
+    val usage = s"usage: ${Usage.curate}"
     require(args.length >= 2 && !args(0).startsWith("-") && !args(1).startsWith("-"),
       usage)
     val parsed =
@@ -1842,7 +1423,7 @@ object Pipeline {
   }
 
   private def statusMain(args: Array[String]): Unit = {
-    val usage = "usage: Pipeline status <outDir> [RUNNING|SUCCESS|FAILED] [limit]"
+    val usage = s"usage: ${Usage.status}"
     require(args.nonEmpty && !args(0).startsWith("-"), usage)
     val (filter, limit) = parseStatusArgs(args.drop(1).toSeq)
     val spark = graft.core.EngineSession.create()
@@ -1877,18 +1458,7 @@ object Pipeline {
     if (args.headOption.contains("export-shards")) return exportShardsMain(args.drop(1))
     if (args.headOption.contains("curate")) return curateMain(args.drop(1))
     if (args.headOption.contains("crawl")) return crawlMain(args.drop(1))
-    require(args.length >= 2,
-      "usage: Pipeline <inPathOrDir> <outDir> [parquet|csv|json] | " +
-        "Pipeline status <outDir> [RUNNING|SUCCESS|FAILED] [limit] | " +
-        "Pipeline cleanup <outDir> [--force] [--delete-ledger] | " +
-        "Pipeline export-shards <inParquet> <outDir> [nShards] [idCol] [textCol] | " +
-        "Pipeline curate <inPath> <outDir> [--min-quality X] [--sample F] " +
-        "[--max-tokens N] [--format parquet|tar] [--shards N] " +
-        "[--blocked-domains d1,d2] [--dry-run] | " +
-        "Pipeline crawl <inDir> <outDir> [--agent NAME] " +
-        "[--blocked-domains d1,d2] [--robots PARQUET] [--corpus PARQUET] " +
-        "[--psl PARQUET] [--change-aware] [--files-per-drain N] " +
-        "[--compact-every K] [--dry-run]")
+    require(args.length >= 2, s"usage: ${Usage.all}")
     val spark = graft.core.EngineSession.create()
     val in = args(0)
     val source =

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Round-boundary materialization policy for iterative operators
   * (k-core, PageRank, label propagation, Lloyd, budget select, …).
@@ -49,4 +50,33 @@ object Durable {
       df.observe(obs, metrics.head, metrics.tail: _*), checkpointDir, tag)
     (out, obs.get)
   }
+
+  /** [[materialize]] with one [[RowCount]] riding the materialization
+    * job: the materialized frame and its row count.
+    */
+  def materializeCounted(df: DataFrame, checkpointDir: Option[String] = None,
+      tag: String = ""): (DataFrame, Long) = {
+    val c = new RowCount
+    val out = materialize(c.on(df), checkpointDir, tag)
+    (out, c.n)
+  }
+
+  /** A row count that rides the job which materializes the frame it is
+    * attached to (`Dataset.observe` — one CollectMetrics node) instead
+    * of paying a separate count action: `on` attaches it, `n` reads it
+    * once that job has run. A provably-empty plan is optimizer-eliminated
+    * together with its node (PropagateEmptyRelation), so an absent
+    * metric reads as 0.
+    */
+  final class RowCount {
+    private val obs = org.apache.spark.sql.Observation()
+    def on(df: DataFrame): DataFrame = df.observe(obs, count(lit(1)).as("n"))
+    def n: Long = metric(obs.get, "n")
+  }
+
+  /** One `Long` metric of an observation (absent — an eliminated
+    * empty plan — reads as 0).
+    */
+  def metric(m: Map[String, Any], key: String): Long =
+    m.get(key).map(_.asInstanceOf[Long]).getOrElse(0L)
 }

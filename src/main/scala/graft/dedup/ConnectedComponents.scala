@@ -48,14 +48,12 @@ object ConnectedComponents {
     // The edge count rides the materialization job (Dataset.observe):
     // the adaptive-cutover decision costs zero extra passes over the
     // (often expensively derived) edge list.
-    val obs = org.apache.spark.sql.Observation()
-    val e = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint()
+    val (e, nEdges) = graft.core.Durable.materializeCounted(
+      edges.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull))
     // A provably-empty edge list is optimizer-eliminated together with
     // its CollectMetrics node (PropagateEmptyRelation) — no metrics ≡ 0.
-    if (obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L) <= maxLocalEdges)
+    if (nEdges <= maxLocalEdges)
       return assignLocal(vertices, e)
     val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
 
@@ -80,7 +78,7 @@ object ConnectedComponents {
       (out,
         m.get("s").map(_.asInstanceOf[java.math.BigDecimal])
           .getOrElse(java.math.BigDecimal.ZERO),
-        m.get("n").map(_.asInstanceOf[Long]).getOrElse(0L))
+        graft.core.Durable.metric(m, "n"))
     }
 
     // Active subgraph: vertices with degree ≥ 1.

@@ -82,14 +82,10 @@ object ExactSubstr {
     // billions of duplicated hashes) the hint is withheld and the join
     // stays a keyed shuffle — the decision is data-adaptive, not a
     // local-mode constant.
-    val obs = org.apache.spark.sql.Observation()
-    val dupH = win.groupBy(col("h"))
+    val (dupH, nDup) = graft.core.Durable.materializeCounted(win.groupBy(col("h"))
       .agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
-      .select(col("h"))
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint()
-    val nDup = obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+      .select(col("h")))
     // 8 bytes a hash; 1M hashes ≈ the 8 MB broadcast-relation ballpark
     val dupSide = if (nDup <= 1000000L) broadcast(dupH) else dupH
     val marked = win.join(dupSide, Seq("h"), "left_semi")

@@ -178,11 +178,9 @@ object IncrementalIngest {
       textCol: String,
       threshold: Double = 0.5
   ): (DataFrame, Array[Long], MinHashDedup.Index) = {
-    import org.apache.spark.sql.Observation
-    val obs = Map("batch" -> Observation(), "exact" -> Observation(),
-      "intra" -> Observation(), "survivors" -> Observation())
-    def counted(df: DataFrame, name: String): DataFrame =
-      df.observe(obs(name), count(lit(1)).as("n"))
+    val obs = Seq("batch", "exact", "intra", "survivors")
+      .map(_ -> new graft.core.Durable.RowCount).toMap
+    def counted(df: DataFrame, name: String): DataFrame = obs(name).on(df)
     val st = stages(corpusIndex, counted(batch, "batch"), idCol, textCol,
       threshold, (df, name) => counted(df, name).localCheckpoint())
     val surv = counted(st.survivors, "survivors").localCheckpoint()
@@ -190,8 +188,7 @@ object IncrementalIngest {
     // (PropagateEmptyRelation) together with its CollectMetrics node —
     // the observation then completes with NO metrics, which is exactly
     // a zero count. Any non-empty plan keeps its node.
-    def n(name: String): Long =
-      obs(name).get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+    def n(name: String): Long = obs(name).n
     val survIds = surv.select(col(idCol).as("id"))
     val ext = MinHashDedup.Index(
       st.batchIdx.buckets.join(survIds, Seq("id"), "left_semi")

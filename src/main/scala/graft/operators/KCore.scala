@@ -49,26 +49,21 @@ object KCore {
     // an unchanged count means a fixpoint — the remaining rounds would
     // be identities (which is also why the fixed-round unrolled oracle
     // stays equivalent). The count RIDES the round's materialization
-    // job (Durable.materializeObserved) — zero extra actions per round.
-    val nMetric = Seq(count(lit(1)).as("n"))
-    def obsN(m: Map[String, Any]): Long =
-      m.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    var (e, m0) = graft.core.Durable.materializeObserved(
+    // job (Durable.materializeCounted) — zero extra actions per round.
+    var (e, prevEdges) = graft.core.Durable.materializeCounted(
       edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b")),
-      checkpointDir, "round0", nMetric)
-    var prevEdges = obsN(m0)
+      checkpointDir, "round0")
     var round = 0
     var stable = false
     while (round < maxRounds && !stable) {
       val keep = degrees(e).where(col("degree") >= k).select("vertex")
       round += 1
-      val (e2, m) = graft.core.Durable.materializeObserved(
+      val (e2, nEdges) = graft.core.Durable.materializeCounted(
         e.join(keep.withColumnRenamed("vertex", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("vertex", "b"), Seq("b"), "left_semi")
           .select("a", "b"),
-        checkpointDir, s"round$round", nMetric)
+        checkpointDir, s"round$round")
       e = e2
-      val nEdges = obsN(m)
       stable = nEdges == prevEdges
       prevEdges = nEdges
     }

@@ -59,12 +59,11 @@ object PageRank {
       e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src"),
       "edges_outdeg")
     // node count rides the materialization job (no separate action)
-    val (nodes, nm) = graft.core.Durable.materializeObserved(
+    val (nodes, n) = graft.core.Durable.materializeCounted(
       e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id")))
         .distinct(),
-      checkpointDir, "nodes", Seq(count(lit(1)).as("n")))
-    val n = nm.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+      checkpointDir, "nodes")
     val base = (1.0 - damping) / n
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
     var i = 0

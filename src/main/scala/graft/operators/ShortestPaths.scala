@@ -76,8 +76,7 @@ object ShortestPaths {
     val stampMetrics = Seq(count(lit(1)).as("n"),
       coalesce(sum(col("dist")), lit(0L)).as("s"))
     def stampOf(m: Map[String, Any]): (Long, Long) = (
-      m.get("n").map(_.asInstanceOf[Long]).getOrElse(0L),
-      m.get("s").map(_.asInstanceOf[Long]).getOrElse(0L))
+      graft.core.Durable.metric(m, "n"), graft.core.Durable.metric(m, "s"))
     def matStamped(df: DataFrame, tag: String): (DataFrame, (Long, Long)) = {
       val (out, m) = graft.core.Durable.materializeObserved(
         df, checkpointDir, tag, stampMetrics)

@@ -218,9 +218,7 @@ object TxTable {
     // nondeterministic source would make the attempts inconsistent.
     // The batch count rides the materialization job (Dataset.observe,
     // guide §1.4) — was a second full pass over the checkpointed frame.
-    val obsU = org.apache.spark.sql.Observation()
-    val upd = updates.observe(obsU, count(lit(1)).as("n")).localCheckpoint()
-    val updCount = obsU.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+    val (upd, updCount) = graft.core.Durable.materializeCounted(updates)
     require(keyCols.forall(upd.columns.contains),
       s"updates missing key columns ${keyCols.filterNot(upd.columns.contains)}")
 
@@ -451,10 +449,9 @@ object TxTable {
     // is one extra pass of the whole snapshot per merge. A provably-
     // empty snapshot is optimizer-eliminated with its CollectMetrics
     // node — absent metrics read as 0, which is exactly the rows written.
-    val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(dataPath.toString)
-    val rows = obs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+    val rowCount = new graft.core.Durable.RowCount
+    rowCount.on(df).write.mode(SaveMode.Overwrite).parquet(dataPath.toString)
+    val rows = rowCount.n
 
     f.mkdirs(commitsDir(dir))
     val cPath = commitPath(dir, version)

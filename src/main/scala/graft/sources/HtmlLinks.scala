@@ -275,7 +275,7 @@ object HtmlLinks {
     val b = regexp_replace(base, "#.*$", "")
     val scheme = regexp_extract(b, "^([a-zA-Z][a-zA-Z0-9+.-]*):", 1)
     val origin = regexp_extract(b, "^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)
-    val bPath = regexp_extract(b, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)", 1)
+    val bPath = UrlOps.path(b)
     // base path up to and including its last '/', or '/' when rootless
     val dir0 = regexp_extract(bPath, "^(.*/)", 1)
     val dir = when(dir0 === "", lit("/")).otherwise(dir0)

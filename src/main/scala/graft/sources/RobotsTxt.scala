@@ -194,8 +194,7 @@ object RobotsTxt {
       bodyCol: String = "body",
       typeCol: String = "warc_type",
       truncatedCol: String = "truncated"): DataFrame = {
-    val path = regexp_extract(col(uriCol),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)", 1)
+    val path = UrlOps.path(col(uriCol))
     records
       .where(col(statusCol) === 200 && path === "/robots.txt" &&
         col(typeCol) === "response" && col(truncatedCol).isNull)
@@ -230,8 +229,7 @@ object RobotsTxt {
       uriCol: String = "target_uri",
       statusCol: String = "http_status",
       typeCol: String = "warc_type"): DataFrame = {
-    val path = regexp_extract(col(uriCol),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)", 1)
+    val path = UrlOps.path(col(uriCol))
     records
       .where(col(typeCol) === "response" && path === "/robots.txt" &&
         col(statusCol).isNotNull)

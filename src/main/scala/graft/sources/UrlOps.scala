@@ -30,6 +30,10 @@ object UrlOps {
   def host(url: Column): Column =
     lower(regexp_extract(url, "^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#:]*)", 1))
 
+  /** The path (no query, no fragment); '' for scheme-less input. */
+  def path(url: Column): Column =
+    regexp_extract(url, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)", 1)
+
   def canonicalize(url: Column): Column = {
     // 1. strip the fragment
     val noFrag = regexp_replace(url, "#.*$", "")

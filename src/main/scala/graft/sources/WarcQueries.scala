@@ -569,21 +569,14 @@ object WarcQueries {
           // cannot push through CollectMetrics) while only the FRESH
           // frame (the one the next batch's anti-join reuses)
           // materializes. Was 3 checkpoints + 3 count jobs per batch.
-          val obsB = org.apache.spark.sql.Observation()
-          val obsD = org.apache.spark.sql.Observation()
-          val obsF = org.apache.spark.sql.Observation()
-          def n(o: org.apache.spark.sql.Observation): Long =
-            o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-          val batch = all.filter(col("shard") === k)
-            .withColumn("canon", UrlOps.canonicalize(col("url")))
-            .observe(obsB, count(lit(1)).as("n"))
-          val deduped = graft.dedup.ExactDedup.keepFirst(
-            batch, Seq("canon"), Seq(col("url")))
-            .observe(obsD, count(lit(1)).as("n"))
-          val fresh = graft.dedup.UrlSeenSet.filterNew(deduped, "canon", seen)
-            .observe(obsF, count(lit(1)).as("n"))
+          val Seq(obsB, obsD, obsF) = Seq.fill(3)(new graft.core.Durable.RowCount)
+          val batch = obsB.on(all.filter(col("shard") === k)
+            .withColumn("canon", UrlOps.canonicalize(col("url"))))
+          val deduped = obsD.on(graft.dedup.ExactDedup.keepFirst(
+            batch, Seq("canon"), Seq(col("url"))))
+          val fresh = obsF.on(graft.dedup.UrlSeenSet.filterNew(deduped, "canon", seen))
             .localCheckpoint()
-          val (nBatch, nAfterBatch, nNew) = (n(obsB), n(obsD), n(obsF))
+          val (nBatch, nAfterBatch, nNew) = (obsB.n, obsD.n, obsF.n)
           seen = graft.dedup.UrlSeenSet.extend(seen, fresh, "canon")
           if (k % 2 == 1)
             seen = graft.dedup.UrlSeenSet.compact(seen, s"$scratch/seen_$k")
@@ -653,20 +646,18 @@ object WarcQueries {
           // count + kept count + flag total all ride the fresh frame's
           // checkpoint job. Was: batch cp + count, anti-join count,
           // fresh cp + count = 5 jobs and 2 index probes per batch.
-          val obsB = org.apache.spark.sql.Observation()
+          val obsB = new graft.core.Durable.RowCount
           val obsF = org.apache.spark.sql.Observation()
-          val batch = all.filter(col("batch") === k)
-            .observe(obsB, count(lit(1)).as("n"))
+          val batch = obsB.on(all.filter(col("batch") === k))
           val fresh = graft.dedup.UrlSeenSet
             .filterNewFlagged(batch, "url", "text", seen)
             .observe(obsF, count(lit(1)).as("n"),
               coalesce(sum(when(col(graft.dedup.UrlSeenSet.newUrlFlag), 1L)
                 .otherwise(0L)), lit(0L)).as("new_url"))
             .localCheckpoint()
-          def m(o: org.apache.spark.sql.Observation, k: String): Long =
-            o.get.get(k).map(_.asInstanceOf[Long]).getOrElse(0L)
-          val (nBatch, nKept, nNewUrl) =
-            (m(obsB, "n"), m(obsF, "n"), m(obsF, "new_url"))
+          val (nBatch, nKept, nNewUrl) = (obsB.n,
+            graft.core.Durable.metric(obsF.get, "n"),
+            graft.core.Durable.metric(obsF.get, "new_url"))
           seen = graft.dedup.UrlSeenSet.extend(
             seen, fresh.drop(graft.dedup.UrlSeenSet.newUrlFlag), "url", "text")
           seen = compaction.maybe(k.toLong, seen)(
@@ -791,10 +782,8 @@ object WarcQueries {
                 // drain — and r17 had 5 count jobs + 3 intermediate
                 // checkpoints).
                 val obsB = org.apache.spark.sql.Observation()
-                val obsDom = org.apache.spark.sql.Observation()
-                val obsRob = org.apache.spark.sql.Observation()
-                val obsUrl = org.apache.spark.sql.Observation()
-                val obsNew = org.apache.spark.sql.Observation()
+                val Seq(obsDom, obsRob, obsUrl, obsNew) =
+                  Seq.fill(4)(new graft.core.Durable.RowCount)
                 val noisy = clean.select("bid", "src", "uri2", "html")
                   .unionByName(clean.filter(col("src") % 7 === 0)
                     .select(col("bid"), col("src"),
@@ -811,26 +800,20 @@ object WarcQueries {
                 // level keeps the counts exact (filters do not push
                 // through an observe), while the whole gated chain
                 // materializes in ONE job.
-                val domKept = graft.sources.Domains.filterBlocked(
-                    noisy, "uri2", Seq("tracker.net"))
-                  .observe(obsDom, count(lit(1)).as("n"))
-                val robKept = RobotsTxt.filterAllowed(
+                val domKept = obsDom.on(graft.sources.Domains.filterBlocked(
+                    noisy, "uri2", Seq("tracker.net")))
+                val robKept = obsRob.on(RobotsTxt.filterAllowed(
                     domKept, "uri2", robotsRules, "graftbot")
                   .withColumn("text", call_function("graft_html_text",
                     col("html"), lit(20), lit(33)))
-                  .drop("html")
-                  .observe(obsRob, count(lit(1)).as("n"))
-                val urlDeduped = graft.dedup.ExactDedup.keepFirst(
+                  .drop("html"))
+                val urlDeduped = obsUrl.on(graft.dedup.ExactDedup.keepFirst(
                     robKept.withColumn("canon", UrlOps.canonicalize(col("uri2"))),
-                    Seq("canon"), Seq(col("uri2")))
-                  .observe(obsUrl, count(lit(1)).as("n"))
-                val fresh = graft.dedup.UrlSeenSet.filterNew(
-                    urlDeduped, "canon", seenRef.get)
-                  .observe(obsNew, count(lit(1)).as("n"))
+                    Seq("canon"), Seq(col("uri2"))))
+                val fresh = obsNew.on(graft.dedup.UrlSeenSet.filterNew(
+                    urlDeduped, "canon", seenRef.get))
                   .localCheckpoint()
-                def obsN(o: org.apache.spark.sql.Observation): Long =
-                  o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-                val nBatch = obsN(obsB)
+                val nBatch = graft.core.Durable.metric(obsB.get, "n")
                 // An AvailableNow empty timeout batch reads nBatch = 0
                 // from the same observe (absent metrics ≡ 0) and skips
                 // here: the empty gate chain materializes near-free,
@@ -843,10 +826,7 @@ object WarcQueries {
                   require(cohorts.length == 1 && cohorts.head == expectCohort(ord),
                     s"drain $ord: expected cohort ${expectCohort(ord)}, got " +
                       cohorts.sorted.mkString(","))
-                  val nDom = obsN(obsDom)
-                  val nRob = obsN(obsRob)
-                  val nUrl = obsN(obsUrl)
-                  val nNew = obsN(obsNew)
+                  val (nDom, nRob, nUrl, nNew) = (obsDom.n, obsRob.n, obsUrl.n, obsNew.n)
                   // the seen-set delta is a projection of the ALREADY
                   // checkpointed gated frame — extendBounded skips the
                   // delta's own materialization job per drain (§1.4)
@@ -2367,7 +2347,7 @@ object WarcQueries {
               // separate isEmpty probe paid one extra job per REAL
               // drain (§1.4).
               val m = obsB.get
-              val nBatch = m.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+              val nBatch = graft.core.Durable.metric(m, "n")
               if (nBatch > 0) {
                 val shards = m.get("shards")
                   .map(_.asInstanceOf[scala.collection.Seq[Long]])

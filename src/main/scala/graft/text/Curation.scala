@@ -208,8 +208,7 @@ object Curation {
       val metrics = count(lit(1)).as("n") +: flagCol.map(f =>
         coalesce(sum(when(col(f), 1L).otherwise(0L)), lit(0L)).as("flagged")).toSeq
       def read(m: Map[String, Any]): (Long, Long) =
-        (m.get("n").map(_.asInstanceOf[Long]).getOrElse(0L),
-          m.get("flagged").map(_.asInstanceOf[Long]).getOrElse(0L))
+        (graft.core.Durable.metric(m, "n"), graft.core.Durable.metric(m, "flagged"))
       checkpointDir match {
         case Some(base) =>
           val obs = org.apache.spark.sql.Observation(s"curation_$name")
@@ -283,7 +282,7 @@ object Curation {
     val (quality, qualityN) = boundary(
       blocked.filter(TextAnalysis.qualityScore(col("text")) >= minQuality),
       "quality")
-    val inputN = inObs.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+    val inputN = graft.core.Durable.metric(inObs.get, "n")
 
     // 2. exact dedup (deterministic keep-first per identical text)
     val (exact, exactN) = boundary(

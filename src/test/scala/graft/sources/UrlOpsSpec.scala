@@ -33,6 +33,12 @@ class UrlOpsSpec extends SparkSpec {
     assert(h == "www.example.org")
   }
 
+  test("path extraction: no query, no fragment, '' without a scheme") {
+    val p = Seq("HTTP://h:80/robots.txt?x=1#f", "https://h", "https://h/a/b/", "/rel/x")
+      .toDF("url").select(UrlOps.path(col("url"))).collect().map(_.getString(0)).toSeq
+    assert(p == Seq("/robots.txt", "", "/a/b/", ""))
+  }
+
   test("idempotence: canonicalizing a canonical url is a no-op") {
     val dirty = Seq(
       "HTTP://A.B:80/x/?utm_source=1&k=2#f",

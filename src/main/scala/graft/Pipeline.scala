@@ -65,8 +65,11 @@ object Pipeline {
       val maxMb = config.getInt("etl.extract.max_file_size_mb", 0).toLong
       val raw = Readers.extract(spark, source,
         maxFileSizeMb = if (maxMb > 0) Some(maxMb) else None)
-      val (transformed, stats) = TransformPipeline.runWithStats(raw, config)
-      val load = Writers.load(transformed, jobId, sink)
+      // two executions of the transform plan: the stats job, then the
+      // write, which also fills the output-side stats
+      val transformed = TransformPipeline.runWithStats(raw, config)
+      val load = Writers.load(transformed.output, jobId, sink)
+      val stats = transformed.stats
       val duration = (System.nanoTime() - t0) / 1e9
       ledger.foreach(_.completeJob(jobId, Map(
         "status" -> load.status,

@@ -166,34 +166,48 @@ object Stages {
       warnings: Seq[String]
   )
 
-  /** Profile the output frame in one fused aggregate: per-column null
-    * presence + distinct ratios for string columns. Uses
-    * approx_count_distinct for the ratio (scale-sane; the reference's exact
-    * nunique() is O(distinct) memory, transformer.py:244).
+  /** The output profile as aggregate metrics: row count, per-column null
+    * presence, and distinct counts for string columns. approx_count_distinct,
+    * not the reference's exact nunique() (O(distinct) memory,
+    * transformer.py:244). One list serves the standalone [[validate]]
+    * aggregate and the observation [[TransformPipeline.runWithStats]]
+    * attaches to the write.
     */
-  def validate(df: DataFrame): ValidationReport = {
+  def validationMetrics(df: DataFrame): Seq[Column] = {
+    val stringCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
+    count(lit(1)).as("__n") +:
+      (df.columns.toSeq.map(c => max(col(c).isNull.cast(IntegerType)).as(s"__hasnull__$c")) ++
+        stringCols.map(c => approx_count_distinct(col(c)).as(s"__distinct__$c")))
+  }
+
+  /** The report from [[validationMetrics]] values. An absent or null
+    * metric (no metrics at all, or an aggregate over no rows) reads as its
+    * empty-input value.
+    */
+  def validationReport(df: DataFrame, metrics: Map[String, Any]): ValidationReport = {
+    def value[T](k: String): Option[T] = metrics.get(k).flatMap(v => Option(v.asInstanceOf[T]))
     val cols = df.columns.toSeq
     val stringCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
-    if (cols.isEmpty)
-      return ValidationReport(isValid = true, 0L, 0, Map.empty, Seq.empty)
+    val n = value[Long]("__n").getOrElse(0L)
 
-    val aggs =
-      count(lit(1)).as("__n") +:
-        (cols.map(c => max(col(c).isNull.cast(IntegerType)).as(s"__hasnull__$c")) ++
-          stringCols.map(c => approx_count_distinct(col(c)).as(s"__distinct__$c")))
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val n = row.getAs[Long]("__n")
-
-    val nullCols = cols.filter(c => Option(row.getAs[Int](s"__hasnull__$c")).exists(_ > 0))
+    val nullCols = cols.filter(c => value[Int](s"__hasnull__$c").exists(_ > 0))
     val warnings = Seq.newBuilder[String]
     if (nullCols.nonEmpty) warnings += s"Columns with nulls: ${nullCols.mkString(", ")}"
     if (n > 100) stringCols.foreach { c =>
-      val ratio = row.getAs[Long](s"__distinct__$c").toDouble / n
+      val ratio = value[Long](s"__distinct__$c").getOrElse(0L).toDouble / n
       if (ratio > 0.9)
         warnings += s"Column '$c' may be a unique identifier (high cardinality)"
     }
     val ws = warnings.result()
     ValidationReport(ws.isEmpty, n, cols.length,
       df.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap, ws)
+  }
+
+  /** Profile a frame in one standalone aggregate job. */
+  def validate(df: DataFrame): ValidationReport = {
+    if (df.columns.isEmpty) return validationReport(df, Map.empty)
+    val aggs = validationMetrics(df)
+    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    validationReport(df, row.getValuesMap(row.schema.fieldNames.toSeq))
   }
 }

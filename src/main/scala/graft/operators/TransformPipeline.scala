@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, Observation}
 
 import graft.core.EngineConfig
 
@@ -8,10 +8,11 @@ import graft.core.EngineConfig
   * clean names → nulls → dedup → cast → derive → validate, with the stats
   * dict re-expressed as [[TransformStats]].
   *
-  * Job accounting (the 100 TB concern): `run` costs exactly one stats job
+  * Job accounting (the 100 TB concern): `plan` costs at most one stats job
   * (the fused [[ColumnStats]] aggregate, skipped when no stage needs it) —
-  * the returned plan is otherwise lazy. `runWithStats` adds one counting
-  * job for the output-side counters. The reference's eager per-stage
+  * the returned plan is otherwise lazy. `runWithStats` always runs the
+  * stats job and adds none: its output-side counters ride the caller's
+  * write of the returned plan. The reference's eager per-stage
   * len(df)/isnull() calls would be 6+ full scans here; we refuse to
   * replicate that.
   */
@@ -53,14 +54,28 @@ object TransformPipeline {
     Stages.deriveFields(cast)
   }
 
-  /** Eager path with the reference's full stats contract. Costs the stats
-    * job + two counting jobs (input count fused into ColumnStats; output
-    * count fused into validation).
+  /** The transformed plan and its stats. The output-side counters
+    * (`outputRows`, `rowsRemoved`, `duplicatesRemoved`, `validation`) are a
+    * `Dataset.observe` metric set on `output`, filled by the first action
+    * that executes it — normally the sink write; the observation sits in
+    * that action's result stage, above the dedup shuffle, so a re-run map
+    * stage cannot count twice. `stats` reads them once that action has
+    * run and throws `IllegalStateException` (never blocks) before it.
+    */
+  final class Transformed private[operators] (val output: DataFrame,
+      read: () => TransformStats) {
+    lazy val stats: TransformStats = read()
+  }
+
+  /** Eager path with the reference's full stats contract, for the cost of
+    * the stats job alone: the input count and the rows null handling keeps
+    * come from the fused [[ColumnStats]] aggregate, the output-side
+    * counters from the write (see [[Transformed]]).
     */
   def runWithStats(
       df: DataFrame,
       config: EngineConfig = EngineConfig.default
-  ): (DataFrame, TransformStats) = {
+  ): Transformed = {
     val strategy = Stages.NullStrategy.fromString(
       config.getString("etl.transform.null_handling", "drop"))
     val threshold = config.getDouble("etl.transform.numeric_parse_threshold", 0.8)
@@ -71,24 +86,24 @@ object TransformPipeline {
     if (stats.rowCount == 0) {
       val report = Stages.ValidationReport(isValid = true, 0L, df.columns.length,
         df.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap, Seq.empty)
-      return (df, TransformStats(0, 0, 0, 0, 0, "empty_input", Seq.empty, report))
+      val empty = TransformStats(0, 0, 0, 0, 0, "empty_input", Seq.empty, report)
+      return new Transformed(df, () => empty)
     }
 
-    val afterNulls = Stages.handleNulls(cleaned, strategy, stats)
     // Row count after null handling, before dedup — needed for the
     // duplicates_removed counter (transformer.py:160-170). drop is the only
     // strategy that changes the row count.
     val rowsBeforeDedup =
-      if (strategy == Stages.NullStrategy.Drop) afterNulls.count() else stats.rowCount
+      if (strategy == Stages.NullStrategy.Drop) stats.completeRows else stats.rowCount
+    val afterNulls = Stages.handleNulls(cleaned, strategy, stats)
     val afterDedup = if (dedup) Stages.deduplicate(afterNulls) else afterNulls
     val cast = Stages.castTypes(afterDedup, stats, threshold)
     val derived = Stages.deriveFields(cast)
 
-    val validation = Stages.validate(derived) // fused output-side aggregate
     val applied = Seq("clean_column_names", "null_handling") ++
       (if (dedup) Seq("deduplication") else Nil) ++
       Seq("type_casting", "derived_fields")
-    (derived, TransformStats(
+    def withValidation(validation: Stages.ValidationReport) = TransformStats(
       inputRows = stats.rowCount,
       outputRows = validation.rowCount,
       rowsRemoved = stats.rowCount - validation.rowCount,
@@ -97,6 +112,27 @@ object TransformPipeline {
       nullHandling = strategy.toString.toLowerCase,
       transformationsApplied = applied,
       validation = validation
-    ))
+    )
+    if (rowsBeforeDedup == 0) {
+      // null handling keeps nothing: the counters are known without a write
+      val empty = withValidation(Stages.validationReport(derived, Map.empty))
+      return new Transformed(derived, () => empty)
+    }
+    val obs = Observation()
+    val metrics = Stages.validationMetrics(derived)
+    new Transformed(derived.observe(obs, metrics.head, metrics.tail: _*),
+      () => withValidation(Stages.validationReport(derived, observed(obs, df))))
+  }
+
+  /** The observation's metrics once the observed frame has run. The
+    * observation completes on the listener bus after the action returns,
+    * so drain the bus first; still incomplete means no action ran it.
+    */
+  private def observed(obs: Observation, df: DataFrame): Map[String, Any] = {
+    if (!obs.future.isCompleted) GraftPlanBridge.awaitListeners(df.sparkSession)
+    if (!obs.future.isCompleted) throw new IllegalStateException(
+      "transform stats read before the transformed frame was executed: " +
+        "write Transformed.output first")
+    obs.get
   }
 }

@@ -40,10 +40,12 @@ object Writers {
       sink: SinkSpec,
       jobDate: Instant = Instant.now()
   ): LoadResult = {
-    // L0 empty-skip (loader.py:53-59). isEmpty costs one short-circuiting
-    // job (LocalLimit 1), not a full count.
-    if (df.columns.isEmpty || df.isEmpty)
-      return LoadResult("skipped", "", sink.format.name, 0L, 0L)
+    // L0 empty-skip (loader.py:53-59). A schema-less frame never reaches
+    // the writer; a row-empty one is found AFTER the write, from the
+    // written files' count. A pre-write isEmpty is no cheap probe: LIMIT 1
+    // over a dedup runs the whole upstream plan and its shuffle.
+    val skipped = LoadResult("skipped", "", sink.format.name, 0L, 0L)
+    if (df.columns.isEmpty) return skipped
 
     val dest =
       if (sink.partitionOnData) s"${sink.dir.stripSuffix("/")}/processed/$jobId"
@@ -72,7 +74,20 @@ object Writers {
     }
 
     val (rows, bytes) = writtenStats(df, dest, sink.format)
-    LoadResult("success", dest, sink.format.name, rows, bytes)
+    if (rows > 0) LoadResult("success", dest, sink.format.name, rows, bytes)
+    else {
+      // dest is job-unique: drop it, then the partition dirs it leaves
+      // empty below sink.dir (a non-recursive delete refuses a dir that
+      // another job has written into meanwhile)
+      val path = new Path(dest)
+      val fs = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      fs.delete(path, true)
+      val rootDepth = new Path(sink.dir.stripSuffix("/")).depth
+      var p = path.getParent
+      while (p.depth > rootDepth && fs.listStatus(p).isEmpty && fs.delete(p, false))
+        p = p.getParent
+      skipped
+    }
   }
 
   /** `processed/year=YYYY/month=MM/day=DD` from the job timestamp

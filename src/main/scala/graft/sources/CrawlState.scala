@@ -48,12 +48,16 @@ object CrawlState {
   /** The crawl's durable state under `<out>/state`:
     *  - `v<N>/<piece>` + `_COMMITTED`: what a clean run end committed (a
     *    crash's partial write has no marker and is ignored); restore
-    *    takes the highest committed version;
+    *    takes the highest committed version. The marker holds the last
+    *    batch id folded into `v<N>` (empty: none recorded, as in markers
+    *    written before it was kept);
     *  - `deltas/<dir>`: each drain's batchId-keyed delta per piece
-    *    ([[graft.streaming.ExactlyOnce]]), valid only up to the newest
-    *    batch the streaming checkpoint `ckptDir` committed — a batch
-    *    that wrote deltas but crashed before its offset commit REPLAYS,
-    *    and the replay rewrites them idempotently;
+    *    ([[graft.streaming.ExactlyOnce]]), valid only above the batch
+    *    `v<N>` folded (a crash between the marker and the delta reap
+    *    leaves folded deltas behind) and up to the newest batch the
+    *    streaming checkpoint `ckptDir` committed — a batch that wrote
+    *    deltas but crashed before its offset commit REPLAYS, and the
+    *    replay rewrites them idempotently;
     *  - `epoch_<batchId>/`: the in-loop compactions of [[maintain]].
     */
   final class Store(spark: SparkSession, out: String, ckptDir: String,
@@ -69,9 +73,16 @@ object CrawlState {
     val restoredV: Option[Int] = ls(root).map(_.getPath)
       .filter(p => p.getName.matches("v\\d+") && fs.exists(new Path(p, "_COMMITTED")))
       .map(_.getName.drop(1).toInt).maxOption
+    // the last batch id folded into v<N>, from its marker
+    private val folded: Option[Long] = restoredV.flatMap { v =>
+      val in = fs.open(new Path(s"$root/v$v/_COMMITTED"))
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLongOption
+      finally in.close()
+    }
     // the checkpoint's `commits/` log holds one file per committed batch id
-    private val committed: Option[Long] =
+    private def lastCommitted: Option[Long] =
       ls(s"$ckptDir/commits").flatMap(_.getPath.getName.toLongOption).maxOption
+    private val committed = lastCommitted
 
     def readIfExists(path: String): Option[DataFrame] =
       if (fs.exists(new Path(path)))
@@ -88,7 +99,9 @@ object CrawlState {
     private def deltaDir(dir: String) = s"$root/deltas/$dir"
     private def deltasOf(dir: String): Option[DataFrame] =
       readIfExists(deltaDir(dir)).map { d =>
-        committed.map(c => d.where(col("batch_id") <= c)).getOrElse(d.limit(0))
+        committed.map { c =>
+          d.where(folded.fold(col("batch_id") <= c)(f => col("batch_id").between(f + 1, c)))
+        }.getOrElse(d.limit(0))
       }
 
     private def frame(name: String, get: CrawlState => DataFrame,
@@ -308,13 +321,16 @@ object CrawlState {
         batchId, s.hostRanks)(HostRanks.roll(_, s.hostGraph, batchId)))
     }
 
-    /** Commit `v<N+1>` (pieces, then `_COMMITTED`); reap `v<N>`, the
-      * deltas and the epoch dirs. Returns N+1. */
+    /** Commit `v<N+1>` (pieces, then `_COMMITTED` naming the last batch
+      * the checkpoint committed — every one of them is folded into `s`);
+      * reap `v<N>`, the deltas and the epoch dirs. Returns N+1. */
     def commit(s: CrawlState): Int = {
       val next = restoredV.fold(0)(_ + 1)
       def save[A](p: Piece[A, _]): Unit = p.save(p.get(s), s"$root/v$next/${p.name}")
       pieces.foreach(save(_))
-      fs.create(new Path(s"$root/v$next/_COMMITTED"), true).close()
+      val marker = fs.create(new Path(s"$root/v$next/_COMMITTED"), true)
+      try marker.write(lastCommitted.fold("")(_.toString).getBytes("UTF-8"))
+      finally marker.close()
       restoredV.foreach(v => fs.delete(new Path(s"$root/v$v"), true))
       fs.delete(new Path(s"$root/deltas"), true): Unit
       ls(root).filter(_.getPath.getName.startsWith("epoch_"))

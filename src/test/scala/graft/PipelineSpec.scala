@@ -41,6 +41,82 @@ class PipelineSpec extends SparkSpec {
     assert(noteLines.exists(_.contains("ETL Job Success")))
   }
 
+  test("run executes the transform plan twice: the stats job and the write") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, LogicalPlan}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+    val in = tmpDir("pipe-plans-in")
+    val out = tmpDir("pipe-plans-out")
+    // a planted duplicate and a row with a null, across a CSV and a JSON file
+    Seq(("ORD001", "CUST001", 1L, "2024-01-15"), ("ORD002", "CUST002", 2L, "2024-01-16"),
+      ("ORD002", "CUST002", 2L, "2024-01-16"), ("ORD003", null, 3L, "2024-01-17"))
+      .toDF("order_id", "customer_id", "quantity", "order_date")
+      .coalesce(1).write.option("header", "true").csv(s"$in/csv")
+    Seq(("ORD004", "CUST004", 4L, "2024-01-18"), ("ORD001", "CUST001", 1L, "2024-01-15"))
+      .toDF("order_id", "customer_id", "quantity", "order_date")
+      .coalesce(1).write.json(s"$in/json")
+
+    // the analyzed plan of every action the run executes
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.analyzed): Unit
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = plans.add(qe.analyzed): Unit
+    }
+    org.apache.spark.sql.GraftPlanBridge.awaitListeners(spark)
+    spark.listenerManager.register(listener)
+    val outcome =
+      try {
+        val o = Pipeline.run(spark, SourceSpec.Batch(in), SinkSpec(out))
+        org.apache.spark.sql.GraftPlanBridge.awaitListeners(spark)
+        o
+      } finally spark.listenerManager.unregister(listener)
+    assert(outcome.status == "success", outcome.error)
+    val stats = outcome.stats.get
+    assert(stats.inputRows == 6 && stats.outputRows == 3 && stats.duplicatesRemoved == 2)
+    assert(outcome.load.get.rowsLoaded == 3)
+
+    // schema inference reads the files through the text format; the
+    // transform plan reads them as CSV/JSON
+    val root = new java.io.File(in).toURI.getPath.stripSuffix("/")
+    def scansInput(p: LogicalPlan) = p.exists {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation =>
+          (r.fileFormat.isInstanceOf[CSVFileFormat] ||
+            r.fileFormat.isInstanceOf[JsonFileFormat]) &&
+            r.location.rootPaths.exists(_.toUri.getPath.startsWith(root))
+        case _ => false
+      }
+      case _ => false
+    }
+    val executed = plans.toArray(Array.empty[LogicalPlan]).toSeq
+    assert(executed.count(scansInput) == 2,
+      s"plans scanning the input: ${executed.filter(scansInput).map(_.treeString)}")
+    assert(executed.count(_.exists(_.isInstanceOf[Deduplicate])) == 1,
+      "the dedup shuffle must run once, in the write")
+  }
+
+  test("run over a batch in which every row has a null: load skipped, " +
+      "nothing left under the destination") {
+    import spark.implicits._
+    val in = tmpDir("pipe-allnull-in")
+    val out = tmpDir("pipe-allnull-out")
+    Seq(("ORD001", None: Option[String]), ("ORD002", None)).toDF("order_id", "note")
+      .coalesce(1).write.option("header", "true").csv(s"$in/csv")
+    Seq("ORD003", "ORD004").toDF("order_id").coalesce(1).write.json(s"$in/json")
+
+    val outcome = Pipeline.run(spark, SourceSpec.Batch(in), SinkSpec(out))
+    assert(outcome.status == "success", outcome.error)
+    val stats = outcome.stats.get
+    assert(stats.inputRows == 4 && stats.outputRows == 0 && stats.rowsRemoved == 4)
+    assert(outcome.load.get.status == "skipped" && outcome.load.get.rowsLoaded == 0)
+    val left = new java.io.File(out).listFiles().toSeq
+    assert(left.isEmpty, s"an empty load left $left under the destination")
+  }
+
   test("status subcommand report: job table, counts, durations, dest sizes") {
     val in = tmpDir("pipe-status-in")
     val out = tmpDir("pipe-status-out")
@@ -637,6 +713,57 @@ class PipelineSpec extends SparkSpec {
         s"state piece $p differs after kill+resume: uninterrupted-only " +
           s"${onlyA.toSeq}, resumed-only ${onlyB.toSeq}")
     }
+  }
+
+  test("a crash between the state commit and the delta reap does not " +
+      "replay folded deltas: recrawl matches an uninterrupted run") {
+    import spark.implicits._
+    val H = "fold.example.net"
+    def entry(shard: Int, ord: Long, path: String, text: String) =
+      graft.sources.WarcShards.Entry(shard, ord, "response",
+        s"http://$H$path", s"<urn:test:fold:$shard:$ord>",
+        "application/http;msgtype=response",
+        graft.sources.WarcShards.WarcCodec.httpResponse(
+          ("<html><head><title>t</title></head><body><p>" + text +
+            "</p></body></html>").getBytes("UTF-8"), "text/html; charset=utf-8"))
+    val drops = Seq(
+      entry(0, 1, "/a/1", "the alpha page talks about mountains and rivers flowing north"),
+      entry(0, 2, "/b/1", "a second page describing oceans tides and the salty breeze"),
+      entry(1, 1, "/c/1", "completely different words about the weather in marseille now"))
+    val flags = Pipeline.parseCrawlArgs(Seq("--files-per-drain", "1",
+      "--recrawl-base", "1"))
+
+    val (inA, outA) = (tmpDir("fold-a-in"), tmpDir("fold-a-out"))
+    graft.sources.WarcShards.pack(drops.toDS(), inA): Unit
+    val clean = Pipeline.crawl(spark, inA, outA, args = flags)
+    assert(clean.status == "success" && clean.drains == 2L, s"uninterrupted run: $clean")
+
+    // drain 0 commits its deltas, then the run dies; keep a copy of them
+    val (inB, outB) = (tmpDir("fold-b-in"), tmpDir("fold-b-out"))
+    graft.sources.WarcShards.pack(drops.toDS(), inB): Unit
+    val failCfg = graft.core.EngineConfig.default
+      .withOverride("crawl.fail_after_drains", "1")
+    val r1 = Pipeline.crawl(spark, inB, outB, config = failCfg, args = flags)
+    assert(r1.status == "failed" && r1.drains == 1L, s"run 1: $r1")
+    val deltas = new java.io.File(s"$outB/state/deltas")
+    val aside = new java.io.File(tmpDir("fold-aside"), "deltas")
+    org.apache.commons.io.FileUtils.copyDirectory(deltas, aside)
+
+    // the resume folds them into v0 and reaps them; putting them back is
+    // what a crash between v0's _COMMITTED and the reap leaves
+    val r2 = Pipeline.crawl(spark, inB, outB, args = flags)
+    assert(r2.status == "success" && r2.stateVersion.contains(0), s"resume: $r2")
+    assert(!deltas.exists(), "deltas not reaped by the clean run end")
+    org.apache.commons.io.FileUtils.copyDirectory(aside, deltas)
+    val r3 = Pipeline.crawl(spark, inB, outB, args = flags)
+    assert(r3.status == "success" && r3.drains == 0L && r3.stateVersion.contains(1),
+      s"restart over the leftover deltas: $r3")
+
+    val a = spark.read.parquet(s"$outA/state/v0/recrawl")
+    val b = spark.read.parquet(s"$outB/state/v1/recrawl").select(a.columns.map(col).toSeq: _*)
+    val (onlyA, onlyB) = (a.exceptAll(b).collect(), b.exceptAll(a).collect())
+    assert(onlyA.isEmpty && onlyB.isEmpty,
+      s"recrawl differs: uninterrupted-only ${onlyA.toSeq}, restarted-only ${onlyB.toSeq}")
   }
 
   test("crawl refresh scheduling: due URLs re-emitted once per fetch " +

@@ -140,13 +140,16 @@ class StagesSpec extends SparkSpec {
   }
 
   test("T0: empty input short-circuits (test_transformer.py:26-33)") {
-    val (out, stats) = TransformPipeline.runWithStats(spark.emptyDataFrame)
-    assert(out.columns.isEmpty)
-    assert(stats.nullHandling == "empty_input" && stats.inputRows == 0)
+    val run = TransformPipeline.runWithStats(spark.emptyDataFrame)
+    assert(run.output.columns.isEmpty)
+    assert(run.stats.nullHandling == "empty_input" && run.stats.inputRows == 0)
   }
 
   test("full pipeline: sales frame end-to-end (test_transformer.py:35-43)") {
-    val (out, stats) = TransformPipeline.runWithStats(sampleSales)
+    val run = TransformPipeline.runWithStats(sampleSales)
+    val out = run.output
+    out.write.format("noop").mode("overwrite").save()
+    val stats = run.stats
     assert(stats.inputRows == 3 && stats.outputRows == 3)
     assert(stats.duplicatesRemoved == 0)
     assert(out.schema("order_date").dataType == TimestampType)
@@ -156,8 +159,10 @@ class StagesSpec extends SparkSpec {
 
   test("full pipeline honors null_handling=fill config") {
     val cfg = EngineConfig(Map("etl.transform.null_handling" -> "fill"))
-    val (out, stats) = TransformPipeline.runWithStats(sampleSalesWithNulls, cfg)
-    assert(stats.outputRows == 3)
+    val run = TransformPipeline.runWithStats(sampleSalesWithNulls, cfg)
+    val out = run.output
+    out.write.format("noop").mode("overwrite").save()
+    assert(run.stats.outputRows == 3)
     assert(out.filter(col("customer_id") === "").count() == 1)
   }
 }

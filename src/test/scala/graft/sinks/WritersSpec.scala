@@ -17,6 +17,16 @@ class WritersSpec extends SparkSpec {
     assert(res.status == "skipped" && res.rowsLoaded == 0)
   }
 
+  test("L0: a row-empty frame is found empty after the write and removed") {
+    val out = tmpDir("writers")
+    for (sink <- Seq(SinkSpec(out), SinkSpec(out, FileFormat.Csv),
+        SinkSpec(out, partitionOnData = true))) {
+      val res = Writers.load(sampleSales.limit(0), "job-empty", sink, fixedDate)
+      assert(res.status == "skipped" && res.rowsLoaded == 0 && res.destination.isEmpty)
+      assert(new java.io.File(out).listFiles().isEmpty, s"$sink left files behind")
+    }
+  }
+
   test("L1/L4/L6: parquet write under wall-clock hive path with stats (test_loader.py:45-64)") {
     val out = tmpDir("writers")
     val res = Writers.load(sampleSales, "job-2", SinkSpec(out), fixedDate)
@@ -37,7 +47,7 @@ class WritersSpec extends SparkSpec {
 
   test("L4 data-driven partitioning: partitionBy(_year,_month,_day) layout") {
     val out = tmpDir("writers")
-    val (transformed, _) = TransformPipeline.runWithStats(sampleSales)
+    val transformed = TransformPipeline.runWithStats(sampleSales).output
     val res = Writers.load(transformed, "j-part",
       SinkSpec(out, partitionOnData = true), fixedDate)
     assert(res.status == "success")
@@ -60,8 +70,9 @@ class WritersSpec extends SparkSpec {
   }
 
   test("L7: archive failure returns None, never throws (loader.py:196-204)") {
-    assert(Writers.archiveSource(sampleSales, "/nonexistent/in.csv", "/tmp", fixedDate)
-      .isEmpty || true)
+    val base = tmpDir("writers")
+    assert(Writers.archiveSource(sampleSales, s"$base/missing/in.csv", base, fixedDate)
+      .isEmpty)
   }
 }
 

@@ -771,10 +771,13 @@ object Pipeline {
       * seen-set (each target is emitted once across drains) → the
       * Crawl-delay politeness cap, PRIORITY-ordered by host rank. The
       * capped output extends the emitted set (budget-dropped targets
-      * stay eligible next drain).
+      * stay eligible next drain). Returns the frontier with its row,
+      * refetch and control-refresh counts, which ride the frontier's
+      * checkpoint job.
       */
     def discover(linkPages: DataFrame, extraTargets: DataFrame,
-        controlTargets: DataFrame, batchId: Option[Long]): DataFrame = {
+        controlTargets: DataFrame, batchId: Option[Long])
+        : (DataFrame, Long, Long, Long) = {
       // FOLLOWABLE anchors only: rel=nofollow (and sponsored/ugc)
       // links are not editorial endorsements — seeding the frontier
       // from them is how link spam farms a crawler
@@ -900,23 +903,30 @@ object Pipeline {
         .withColumn("__priority",
           coalesce(col("__rank"), lit(0.0)) + col("__tier"))
         .drop("__thost", "__rhost", "__rank")
-      val capped = graft.sources.CrawlBudget.cap(prioritized, "target",
-        st.delays, horizon, defaultDelay,
-        priorityCol = Some("__priority"))
-        .drop("__priority", "__tier")
-        .localCheckpoint()
+      // refetch emissions are the frontier rows whose emitted key is a
+      // url#generation, not the bare target; control-refresh asks are
+      // counted apart (also generation-keyed, but control-plane rows)
+      import graft.core.Durable.{materializeObserved, metric}
+      val (capped, m) = materializeObserved(
+        graft.sources.CrawlBudget.cap(prioritized, "target",
+          st.delays, horizon, defaultDelay,
+          priorityCol = Some("__priority"))
+          .drop("__priority", "__tier"),
+        None, "frontier", Seq(count(lit(1)).as("n"),
+          count_if(col("__ekey") =!= col("target") && !col("__ctl"))
+            .as("refetch"),
+          count_if(col("__ctl")).as("control")))
       val emDelta = graft.dedup.UrlSeenSet.deltaRows(capped, "__ekey")
       advance(store.Emitted, emDelta, batchId)
-      capped
+      (capped, metric(m, "n"), metric(m, "refetch"), metric(m, "control"))
     }
 
-    def stageCounts(recs0: DataFrame, batchId: Option[Long])
+    def stageCounts(recs: DataFrame, batchId: Option[Long])
         : (DrainCounts, DataFrame, DataFrame, DataFrame, DataFrame) = {
-      // one drained batch of RECORDS through the full loop; returns
-      // (per-stage counts, survivors, frontier, redirect aliases,
-      // non-HTML assets). batchId = None is the dry run: no delta
-      // writes.
-      val recs = recs0.localCheckpoint()
+      // one drained batch of RECORDS (already checkpointed by the
+      // caller) through the full loop; returns (per-stage counts,
+      // survivors, frontier, redirect aliases, non-HTML assets).
+      // batchId = None is the dry run: no delta writes.
 
       // Stage counts ride the stage materialization jobs (Durable's
       // RowCount: one CollectMetrics node per counted level), never a
@@ -1283,20 +1293,14 @@ object Pipeline {
           .select(col("uri"), col("html")))
       // provenance tiers: sitemap-advertised (2) > redirect/canonical
       // final destinations (1) > plain outlinks (0, added in discover)
-      val frontier = discover(linkPages,
+      val (frontier, nFrontier, nRefetch, nControl) = discover(linkPages,
         redirTargets.withColumn("__tier", lit(1.0))
           .unionByName(pageSeeds.withColumn("__tier", lit(2.0)))
           .unionByName(sitemapTargets.withColumn("__tier", lit(2.0)))
           .unionByName(canonTargets.withColumn("__tier", lit(1.0))),
         ctlTargets, batchId)
-      // refetch emissions are the frontier rows whose emitted key is a
-      // url#generation, not the bare target; control-refresh asks are
-      // counted apart (also generation-keyed, but control-plane rows)
-      val nRefetch = frontier.where(col("__ekey") =!= col("target") &&
-        !col("__ctl")).count()
-      val nControl = frontier.where(col("__ctl")).count()
       (DrainCounts(nBatch, nDom, nRob, nUrl, nNew, c(1), c(2), c(3),
-        frontier.count(), nRedir, nRobFetch, nSeeds, nNotMod, nRefetch,
+        nFrontier, nRedir, nRobFetch, nSeeds, nNotMod, nRefetch,
         nAssets, nFailed, nCanon, nNoindex, nControl),
         surv, frontier, allAliases, assets)
     }
@@ -1310,7 +1314,8 @@ object Pipeline {
 
     if (args.dryRun) {
       val (c, _, _, _, _) = stageCounts(
-        records(graft.sources.WarcShards.readRecords(spark, inDir)), None)
+        records(graft.sources.WarcShards.readRecords(spark, inDir))
+          .localCheckpoint(), None)
       println(c.productElementNames.zip(c.productIterator)
         .map { case (k, v) => s"${k.stripPrefix("n_")}=$v" }
         .mkString("", " ", " (dry run — nothing written)"))
@@ -1337,12 +1342,14 @@ object Pipeline {
             throw new RuntimeException(
               s"injected failure after $failAfter drain(s) " +
                 "(crawl.fail_after_drains)")
-          // AvailableNow can fire an empty timeout batch — skip it
-          if (!batch0.isEmpty) {
+          // AvailableNow can fire an empty timeout batch — skip it; the
+          // emptiness check rides the batch's own checkpoint job
+          val (batch, nRecs) = graft.core.Durable.materializeCounted(batch0)
+          if (nRecs > 0) {
             val sp = batch0.sparkSession
             import sp.implicits._
             val (c, surv, frontier, aliases, assets) =
-              stageCounts(batch0, Some(batchId))
+              stageCounts(batch, Some(batchId))
             for ((dir, df) <- Seq(
                 "docs" -> surv.select(col("doc_id"), col("uri"), col("text")),
                 "frontier" -> frontier.select(col("target"), col("etag"), col("last_modified")),

@@ -766,6 +766,42 @@ class PipelineSpec extends SparkSpec {
       s"recrawl differs: uninterrupted-only ${onlyA.toSeq}, restarted-only ${onlyB.toSeq}")
   }
 
+  test("a repeated crawl call reuses the classes the first call compiled") {
+    import spark.implicits._
+    val H = "reuse.example.org"
+    def entry(ord: Long, path: String, text: String, links: Seq[String]) =
+      graft.sources.WarcShards.Entry(0, ord, "response",
+        s"http://$H$path", s"<urn:test:reuse:$ord>",
+        "application/http;msgtype=response",
+        graft.sources.WarcShards.WarcCodec.httpResponse(
+          ("<html><head><title>t</title></head><body><nav>" +
+            links.map(l => s"""<a href="$l">x</a>""").mkString(" ") +
+            "</nav><p>" + text + "</p></body></html>").getBytes("UTF-8"),
+          "text/html; charset=utf-8"))
+    val in = tmpDir("reuse-in")
+    graft.sources.WarcShards.pack(Seq(
+      entry(1, "/a/1", "the alpha page talks about mountains and rivers flowing north",
+        Seq("/a/2", "/a/3")),
+      entry(2, "/a/2", "a second page describing oceans tides and the salty breeze",
+        Seq("/a/1", "/b/1"))
+    ).toDS(), in): Unit
+    val flags = Pipeline.parseCrawlArgs(Seq("--files-per-drain", "1", "--change-aware"))
+    // one histogram update per class Janino compiles (cache misses only)
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE
+    def compilesOf(out: String): Long = {
+      val before = compiled.getCount
+      val r = Pipeline.crawl(spark, in, out, args = flags)
+      assert(r.status == "success" && r.drains == 1L && r.docsIngested == 2L,
+        s"crawl into $out: $r")
+      compiled.getCount - before
+    }
+    val first = compilesOf(tmpDir("reuse-out-1"))
+    val second = compilesOf(tmpDir("reuse-out-2"))
+    info(s"classes compiled: first call $first, second call $second")
+    assert(second <= 10,
+      s"the second call compiled $second classes (the first $first)")
+  }
+
   test("crawl refresh scheduling: due URLs re-emitted once per fetch " +
       "generation, 304 confirms grow the streak, backoff holds across runs") {
     import spark.implicits._

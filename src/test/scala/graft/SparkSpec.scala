@@ -15,6 +15,7 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.EngineSession.compileReuse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

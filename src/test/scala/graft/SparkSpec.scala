@@ -15,6 +15,8 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      // Spark fixes the codegen cache cap at the JVM's first codegen:
+      // this must stay the only session the test JVM builds.
       .config(graft.core.EngineSession.compileReuse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

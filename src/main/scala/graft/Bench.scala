@@ -2,7 +2,11 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, max, xxhash64}
 
 /** Benchmark main: every SparkEntry query against SPARK_GRAFT_SF_DIR
@@ -26,19 +30,19 @@ import org.apache.spark.sql.functions.{col, max, xxhash64}
   * cold swings as noise unless the warm median moves too. The JSON
   * records the protocol ("warm_runs"/"warm_stat") so a record can be
   * audited against the protocol that produced it.
+  *
+  * Every run is metered ([[Meter]]): the last warm run of each query
+  * records its Spark jobs, stages, tasks and executor task time in
+  * `bench_detail.json`. Job counts do not move with host load. Profile a
+  * subset without touching the committed record:
+  * `SPARK_GRAFT_ONLY=q242_crawl_loop_rolling,q227_stream_crawl_ingest
+  * SPARK_GRAFT_WARM_RUNS=1 SPARK_GRAFT_PROBE=off sbt "runMain graft.Bench"`
+  * prints, per query on stderr, those counts and the job wall by call
+  * site, job wall by result stage and top stages by task time.
   */
 object Bench {
 
-  /** JSON string escape (same contract as Verify's). */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  import Verify.{jsonString => q}
 
   /** Locale-invariant decimal formatting (a de_DE default locale would
     * print 0,123 and corrupt the JSON).
@@ -87,6 +91,88 @@ object Bench {
     "q268_fetch_attempts" -> 4,      // 4 attempt-log tick folds
     "q269_sitemap_lastmod" -> 4)     // 4 sequential schedule folds
 
+  final case class Job(site: String, resultStage: String, start: Long, end: Long) {
+    def ms: Long = math.max(0L, end - start)
+  }
+  final case class Stage(id: Int, name: String, tasks: Int, taskMs: Long)
+
+  /** What one metered run cost Spark. */
+  final case class Usage(jobs: Seq[Job], stages: Seq[Stage]) {
+    def tasks: Int = stages.map(_.tasks).sum
+    def taskS: Double = stages.map(_.taskMs).sum / 1e3
+    def json: String =
+      s"""{"jobs":${jobs.size},"stages":${stages.size},"tasks":$tasks,"task_s":${num(taskS)}}"""
+
+    /** Job wall by call site, job wall by result stage (the action inside
+      * composites), and the top stages by executor task time.
+      */
+    def report: String = {
+      def wallBy(key: Job => String) = jobs.groupBy(key).toSeq
+        .map { case (k, js) => (k, js.map(_.ms).sum, js.size) }.sortBy(-_._2).take(40)
+        .map { case (k, ms, n) => f"${ms / 1e3}%9.3f s  n=$n%-4d $k" }
+      val top = stages.sortBy(-_.taskMs).take(25).map(st =>
+        f"${st.taskMs / 1e3}%9.3f s-task  stage=${st.id}%-5d tasks=${st.tasks}%-4d ${st.name}")
+      val jobWall = num(jobs.map(_.ms).sum / 1e3)
+      ((s"-- ${jobs.size} jobs, sum of job wall $jobWall s (gaps = driver/planning time) --" +:
+        wallBy(_.site)) ++
+        ("-- jobs by result-stage site (the action inside composites) --" +: wallBy(_.resultStage)) ++
+        ("-- top stages by executor task time --" +: top)).mkString("\n")
+    }
+  }
+
+  /** The battery's one listener. Jobs are attributed by the description
+    * of their SQL execution, which carries the action's own call site
+    * (e.g. "localCheckpoint at IncrementalIngest.scala:180"), falling back
+    * to the job's `callSite` property. Both come from thread-locals, so a
+    * job started from a pooled thread can carry the description that
+    * thread inherited when it was created (a ForkJoinPool worker born
+    * under one stream labels later Futures with that stream's id); the
+    * counts are exact, the call-site table is a guide. [[open]] and
+    * [[close]] drain the listener bus, so call both outside any timed
+    * window.
+    */
+  final class Meter extends SparkListener {
+    private val execDesc = mutable.HashMap.empty[Long, String]
+    private val jobs = mutable.LinkedHashMap.empty[Int, Job]
+    private val stages = mutable.LinkedHashMap.empty[Int, Stage]
+
+    override def onOtherEvent(ev: SparkListenerEvent): Unit = ev match {
+      case e: SparkListenerSQLExecutionStart => synchronized {
+        execDesc(e.executionId) = e.description.linesIterator
+          .map(_.trim).find(_.nonEmpty).getOrElse("?").take(90)
+      }
+      case _ =>
+    }
+    override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
+      def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+      val site = prop("spark.sql.execution.id").flatMap(id => execDesc.get(id.toLong))
+        .orElse(prop("callSite.short")).getOrElse("?")
+      val resultStage = js.stageInfos.sortBy(_.stageId).lastOption
+        .map(_.name.takeWhile(_ != '(').trim).getOrElse("?")
+      jobs(js.jobId) = Job(site, resultStage, js.time, js.time)
+    }
+    override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
+      jobs.get(je.jobId).foreach(j => jobs(je.jobId) = j.copy(end = je.time))
+    }
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
+      val info = sc.stageInfo
+      stages(info.stageId) = Stage(info.stageId, info.name.take(90), info.numTasks,
+        info.taskMetrics.executorRunTime)
+    }
+
+    /** Forget every event delivered so far: the window starts here. */
+    def open(spark: SparkSession): Unit = {
+      GraftPlanBridge.awaitListeners(spark)
+      synchronized { execDesc.clear(); jobs.clear(); stages.clear() }
+    }
+
+    /** What the window since [[open]] ran. */
+    def close(spark: SparkSession): Usage = {
+      GraftPlanBridge.awaitListeners(spark)
+      synchronized(Usage(jobs.values.toSeq, stages.values.toSeq))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -101,6 +187,8 @@ object Bench {
     // One warm-up action so JVM/codegen startup isn't billed to the first
     // query in the report.
     spark.read.parquet(s"$sfDir/region.parquet").count()
+    val meter = new Meter
+    spark.sparkContext.addSparkListener(meter)
 
     // ---- host-load probe (r17 verdict #1: make the channel
     // noise-proof, don't hope for calm weather) ----
@@ -251,7 +339,8 @@ object Bench {
     val results = selected.zipWithIndex.map { case ((name, fn), qi) =>
       if (qi > 0 && qi % probeEvery == 0)
         probeCheck(qi, haveRecord = only.isEmpty)
-      def once(): Option[Double] = {
+      def once(): Option[(Double, Usage)] = {
+        meter.open(spark)
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
@@ -261,10 +350,13 @@ object Bench {
               false
           }
         val elapsed = (System.nanoTime() - t0) / 1e9
+        val usage = meter.close(spark)
         cleanup()
-        if (ok) Some(elapsed) else None
+        if (ok) Some(elapsed -> usage) else None
       }
-      val cold = once()
+      // the cold run also builds the fixtures cached once per JVM, so
+      // only warm runs are metered
+      val cold = once().map(_._1)
       if (cold.isEmpty) failed += name
       // Warm: MEDIAN of n re-runs (lower-middle for even n — still a real
       // sample, still outlier-robust), skipped for a failed query. A query
@@ -272,21 +364,29 @@ object Bench {
       // otherwise the median computes over fewer samples than the protocol
       // claims and the crash reads as noise.
       val warmSamples = if (cold.isEmpty) Seq.empty else Seq.fill(warmRuns)(once()).flatten
-      val warm = if (warmSamples.size == warmRuns && warmRuns > 0)
-        Some(warmSamples.sorted.apply((warmRuns - 1) / 2))
-      else None
+      val complete = warmSamples.size == warmRuns && warmRuns > 0
+      val warm =
+        if (complete) Some(warmSamples.map(_._1).sorted.apply((warmRuns - 1) / 2)) else None
+      val usage = if (complete) warmSamples.lastOption.map(_._2) else None
       if (cold.nonEmpty && warmRuns > 0 && warm.isEmpty) failed += name
+      if (only.nonEmpty) usage.foreach { u =>
+        System.err.println(s"== $name: last warm run ${num(warmSamples.last._1)} s, " +
+          s"${u.jobs.size} jobs, ${u.stages.size} stages, ${u.tasks} tasks, " +
+          s"task_s ${num(u.taskS)} ==\n${u.report}")
+      }
       // -1 marks a failed run (NaN is not valid JSON)
-      (name, cold.getOrElse(-1.0), warm.getOrElse(-1.0))
+      (name, cold.getOrElse(-1.0), warm.getOrElse(-1.0), usage)
     }
     // closing probe: the record is only committed when the window
     // ENDED as calm as it opened
     probeCheck(selected.size, haveRecord = only.isEmpty)
-    def row(fmt: Double => String, sel: ((String, Double, Double)) => Double): String =
-      results.map { case t @ (k, _, _) => q(k) + ":" + fmt(sel(t)) }.mkString("{", ",", "}")
+    def row(fmt: Double => String, sel: ((String, Double, Double, Option[Usage])) => Double): String =
+      results.map { case t @ (k, _, _, _) => q(k) + ":" + fmt(sel(t)) }.mkString("{", ",", "}")
     val totalCold = results.map(_._2).filter(_ >= 0).sum
     val totalWarm = results.map(_._3).filter(_ >= 0).sum
     val failedJson = failed.map(q).mkString("[", ",", "]")
+    val meterJson = results.flatMap { case (k, _, _, u) => u.map(q(k) + ":" + _.json) }
+      .mkString("{", ",", "}")
 
     // Full-precision cold+warm detail goes to a FILE, not stdout: the
     // driver keeps only the last ~2000 chars of process output, and the
@@ -323,7 +423,7 @@ object Bench {
     // scaling run overwrites these files too, and a record that does not
     // name its core count can masquerade as the 32-core headline.
     val detail =
-      s"""{"metric":"total","value":${num(totalCold)},"unit":"sec","value_warm":${num(totalWarm)},$protocol,"cpus":$cpus,"query_set_hash":${q(setHash)},"query_count":${SparkEntry.queries.size},"cycles":$cyclesJson,"cycle_units":$cycleUnits,"sec_per_unit_cold":${num(secPerUnit)},"unit_ratio_vs_r2":${num(unitRatio)},$probeJson,"queries":${row(num, _._2)},"queries_warm":${row(num, _._3)},"failed":$failedJson,"sf":${q(sfDir)}}"""
+      s"""{"metric":"total","value":${num(totalCold)},"unit":"sec","value_warm":${num(totalWarm)},$protocol,"cpus":$cpus,"query_set_hash":${q(setHash)},"query_count":${SparkEntry.queries.size},"cycles":$cyclesJson,"cycle_units":$cycleUnits,"sec_per_unit_cold":${num(secPerUnit)},"unit_ratio_vs_r2":${num(unitRatio)},$probeJson,"queries":${row(num, _._2)},"queries_warm":${row(num, _._3)},"queries_meter":$meterJson,"failed":$failedJson,"sf":${q(sfDir)}}"""
     // A dev subset run (SPARK_GRAFT_ONLY) must NOT clobber the committed
     // full-battery record — that is exactly the stale-number class the
     // r7 verdict flagged.
@@ -337,7 +437,7 @@ object Bench {
       // quoting a stale record (the r5–r9 drift class; r9 verdict #1).
       val nOk = results.count(t => t._2 >= 0 && t._3 >= 0)
       val slowest = results.filter(_._3 >= 0).sortBy(-_._3).take(5)
-        .map { case (k, _, w) => s"$k ${num2(w)}s" }.mkString(", ")
+        .map { case (k, _, w, _) => s"$k ${num2(w)}s" }.mkString(", ")
       val cyclesLine = cycles.toSeq.sortBy(_._1)
         .map { case (k, n) => s"$k ×$n" }.mkString(", ")
       val record =
@@ -383,7 +483,7 @@ object Bench {
     // than emitting an unparseable over-long line.
     def compactLine(keep: Int): String = {
       val kept = results.sortBy(t => -math.max(t._2, t._3)).take(keep).sortBy(_._1)
-      val qmap = kept.map { case (k, c, _) => q(k) + ":" + num2(c) }.mkString("{", ",", "}")
+      val qmap = kept.map { case (k, c, _, _) => q(k) + ":" + num2(c) }.mkString("{", ",", "}")
       val omitted = if (kept.size < results.size) s""","queries_omitted":${results.size - kept.size}""" else ""
       s"""{"metric":"total","value":${num2(totalCold)},"unit":"sec","value_warm":${num2(totalWarm)},$protocol,"queries":$qmap$omitted,"failed":$failedJson,"sf":${q(sfDir)}}"""
     }

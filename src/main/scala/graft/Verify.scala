@@ -36,6 +36,21 @@ object Verify {
     n == "manifest.json" || n == "oracle_sql.json" ||
       isDump(n) || n.startsWith(".") || n.startsWith("_")
 
+  /** JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped — a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness. Bench's JSON line uses the same escape.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -96,20 +111,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Provenance manifest: records WHICH sf the dump came from so the
     // compare step can refuse a cross-sf or stale comparison (ADVICE r1:
@@ -123,7 +126,7 @@ object Verify {
       "written_at" -> java.time.Instant.now().toString,
       "failed" -> failedQueries.sorted.mkString(","))
     Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      manifest.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+      manifest.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}"))
     spark.stop()
   }
 }

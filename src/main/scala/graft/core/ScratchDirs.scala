@@ -72,4 +72,26 @@ object ScratchDirs {
   }
 
   def release(path: String): Unit = { leases.remove(path): Unit }
+
+  private val stagedCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** A fixture staged once per JVM per (`name`, sf dir): `build` fills a
+    * dir leased for the JVM lifetime (the shutdown hook deletes it) and
+    * returns the path to cache. Equivalent spellings of the sf dir
+    * (trailing slash, relative vs absolute) share one entry. A failed
+    * build releases its lease and caches nothing, so the next call
+    * rebuilds. `build` must not stage another fixture.
+    */
+  def staged(name: String, sfDir: String)(build: String => String): String =
+    stagedCache.computeIfAbsent(
+      name + "|" + java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize.toString,
+      _ => {
+        val dir = lease(s"graft-$name-")
+        try build(dir)
+        catch {
+          case e: Throwable =>
+            release(dir)
+            throw e
+        }
+      })
 }

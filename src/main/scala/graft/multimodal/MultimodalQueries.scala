@@ -48,33 +48,16 @@ object MultimodalQueries {
     * right after session warm-up); Verify builds lazily on first use,
     * which is fine because correctness is untimed.
     *
-    * Each dir is a [[graft.core.ScratchDirs.lease]] held for the JVM
-    * lifetime (a deliberate never-released cache — the shutdown hook
-    * deletes it); the lease is released on a FAILED build before
-    * rethrowing so a crash cannot pin a half-written dir (ADVICE r8).
-    * Keys use the normalized absolute sf path: equivalent spellings of
-    * the same dir (trailing slash, relative vs absolute
-    * SPARK_GRAFT_SF_DIR) must not build and lease two corpora in one
-    * JVM (ADVICE r9).
+    * Each corpus is a [[graft.core.ScratchDirs.staged]] fixture.
     */
-  private val corpusCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def materializeCorpus(s: SparkSession, dir: String, name: String)(
       build: => org.apache.spark.sql.Dataset[(Long, Array[Byte])]): String =
-    corpusCache.computeIfAbsent(
-      name + "|" + java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString, _ => {
-        import s.implicits._
-        val lease = graft.core.ScratchDirs.lease(s"graft-$name-")
-        val path = s"$lease/$name.parquet"
-        try {
-          build.toDF("id", "gif").write.mode("overwrite").parquet(path)
-          path
-        } catch {
-          case e: Throwable =>
-            graft.core.ScratchDirs.release(lease)
-            throw e
-        }
-      })
+    graft.core.ScratchDirs.staged(name, dir) { lease =>
+      import s.implicits._
+      val path = s"$lease/$name.parquet"
+      build.toDF("id", "gif").write.mode("overwrite").parquet(path)
+      path
+    }
 
   /** q85's corpus: per-doc 4-frame animated GIFs plus resized (%4) and
     * slow-motion (%6) planted variants under shifted ids.

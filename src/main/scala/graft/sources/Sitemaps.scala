@@ -59,13 +59,4 @@ object Sitemaps {
           xmlUnescape(regexp_extract(b, LocRe, 1)).as("loc"),
           nullif(regexp_extract(b, LastmodRe, 1), lit("")).as("lastmod"))),
       e => e.getField("loc") =!= "")
-
-  /** The DuckDB mirror of [[urls]] over an xml-valued SQL expression. */
-  def urlsSql(xmlRef: String): String = {
-    val dec = "replace(replace(replace(replace(replace(l, " +
-      "'&lt;', '<'), '&gt;', '>'), '&quot;', '\"'), " +
-      "'&apos;', ''''), '&amp;', '&')"
-    s"list_filter(list_transform(" +
-      s"regexp_extract_all($xmlRef, '$LocRe', 1), l -> $dec), u -> u <> '')"
-  }
 }

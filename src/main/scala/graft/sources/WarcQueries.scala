@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver-contract queries for the WARC source + HTML→text extraction —
@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * The fixture synthesizes a Common-Crawl-shaped crawl FROM the
   * `documents` table with a closed-form page template, packs it into 8
   * real WARC shards (even shards plain, odd shards per-record-gzip — both
-  * read paths exercised in every query), and stages it once per JVM (the
-  * MultimodalQueries corpus-cache pattern). Because the template is
+  * read paths exercised in every query), and stages it once per JVM
+  * ([[graft.core.ScratchDirs.staged]]). Because the template is
   * closed-form, DuckDB can rebuild every byte: q214 recomputes the whole
   * record inventory from SQL string concatenation, and q215's extraction
   * oracle is simply `documents.text` — boilerplate removal must recover
@@ -61,62 +61,62 @@ object WarcQueries {
 
   private val NShards = 8
 
-  /** Staged once per JVM per sf dir: build the crawl, pack 8 shards
-    * (even plain / odd gzip), return the shard directory.
+  /** Stage a WARC fixture once per JVM per sf dir
+    * ([[graft.core.ScratchDirs.staged]]) and return its shard directory.
+    * Even shards pack plain and odd shards per-record gzip, so every
+    * fixture exercises both read paths.
     */
-  private val crawlCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def stageShards(name: String, dir: String)(
+      entries: => Dataset[WarcShards.Entry]): String =
+    graft.core.ScratchDirs.staged(name, dir) { out =>
+      val all = entries
+      WarcShards.pack(all.filter(_.shard % 2 == 0), out, gzip = false): Unit
+      WarcShards.pack(all.filter(_.shard % 2 == 1), out, gzip = true): Unit
+      out
+    }
 
+  /** The base crawl: a request/response pair per doc over 8 shards,
+    * each led by a warcinfo record.
+    */
   def materializeCrawl(s: SparkSession, dir: String): String =
-    crawlCache.computeIfAbsent(
-      "warc-crawl|" + java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString,
-      _ => {
-        import s.implicits._
-        val lease = graft.core.ScratchDirs.lease("graft-warc-crawl-")
-        try {
-          val docs = Tables.load(s, dir, "documents")
-            .select(col("doc_id").cast("long"), col("text"), col("lang"))
-            .as[(Long, String, String)]
-          val pages = docs.flatMap { case (id, text, lang) =>
-            val shard = (id % NShards).toInt
-            val uri = s"http://example.com/doc/$id"
-            val html = pageHtml(id, lang, text).getBytes(StandardCharsets.UTF_8)
-            val ct = "text/html; charset=utf-8"
-            // all three wire shapes real captures carry, by doc cohort:
-            // plain Content-Length, gzip Content-Encoding, chunked
-            // Transfer-Encoding — the reader must hand extraction the
-            // same entity bytes for every cohort (q215's oracle is the
-            // cohort-blind documents table).
-            val http = (id % 3) match {
-              case 0 => WarcShards.WarcCodec.httpResponse(html, ct)
-              case 1 => WarcShards.WarcCodec.httpResponseGzip(html, ct)
-              case _ => WarcShards.WarcCodec.httpResponseChunked(html, ct, chunkSize = 100)
-            }
-            Seq(
-              // the request carries WARC-Concurrent-To → its response
-              // (the Common Crawl pairing key; URI alone is ambiguous in
-              // real crawls, which refetch URIs across segments)
-              WarcShards.Entry(shard, id * 2 + 1, "request", uri,
-                s"<urn:graft:req:$id>", "application/http;msgtype=request",
-                requestPayload(id), concurrentTo = s"<urn:graft:resp:$id>"),
-              WarcShards.Entry(shard, id * 2 + 2, "response", uri,
-                s"<urn:graft:resp:$id>", "application/http;msgtype=response",
-                http))
-          }
-          val info = s.createDataset((0 until NShards).map { sh =>
-            WarcShards.Entry(sh, 0L, "warcinfo", "",
-              s"<urn:graft:warcinfo:$sh>", "application/warc-fields",
-              warcinfoPayload)
-          })
-          val all = pages.union(info)
-          WarcShards.pack(all.filter(_.shard % 2 == 0), lease, gzip = false): Unit
-          WarcShards.pack(all.filter(_.shard % 2 == 1), lease, gzip = true): Unit
-          lease
-        } catch {
-          case e: Throwable =>
-            graft.core.ScratchDirs.release(lease)
-            throw e
+    stageShards("warc-crawl", dir) {
+      import s.implicits._
+      val docs = Tables.load(s, dir, "documents")
+        .select(col("doc_id").cast("long"), col("text"), col("lang"))
+        .as[(Long, String, String)]
+      val pages = docs.flatMap { case (id, text, lang) =>
+        val shard = (id % NShards).toInt
+        val uri = s"http://example.com/doc/$id"
+        val html = pageHtml(id, lang, text).getBytes(StandardCharsets.UTF_8)
+        val ct = "text/html; charset=utf-8"
+        // all three wire shapes real captures carry, by doc cohort:
+        // plain Content-Length, gzip Content-Encoding, chunked
+        // Transfer-Encoding — the reader must hand extraction the
+        // same entity bytes for every cohort (q215's oracle is the
+        // cohort-blind documents table).
+        val http = (id % 3) match {
+          case 0 => WarcShards.WarcCodec.httpResponse(html, ct)
+          case 1 => WarcShards.WarcCodec.httpResponseGzip(html, ct)
+          case _ => WarcShards.WarcCodec.httpResponseChunked(html, ct, chunkSize = 100)
         }
+        Seq(
+          // the request carries WARC-Concurrent-To → its response
+          // (the Common Crawl pairing key; URI alone is ambiguous in
+          // real crawls, which refetch URIs across segments)
+          WarcShards.Entry(shard, id * 2 + 1, "request", uri,
+            s"<urn:graft:req:$id>", "application/http;msgtype=request",
+            requestPayload(id), concurrentTo = s"<urn:graft:resp:$id>"),
+          WarcShards.Entry(shard, id * 2 + 2, "response", uri,
+            s"<urn:graft:resp:$id>", "application/http;msgtype=response",
+            http))
+      }
+      val info = s.createDataset((0 until NShards).map { sh =>
+        WarcShards.Entry(sh, 0L, "warcinfo", "",
+          s"<urn:graft:warcinfo:$sh>", "application/warc-fields",
+          warcinfoPayload)
       })
+      pages.union(info)
+    }
 
   private def stopList = graft.text.TextAnalysis.stopwords
     .map(w => s"'$w'").mkString(", ")
@@ -131,41 +131,28 @@ object WarcQueries {
     * doc_id % 5 ≠ 0; the ROLLING index's day-1 survivors for the novel
     * doc_id % 40 = 5 cohort, which only a grown index can kill).
     */
-  private val recrawlCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def materializeRecrawl(s: SparkSession, dir: String): String =
-    recrawlCache.computeIfAbsent(
-      "warc-recrawl|" + java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString,
-      _ => {
-        import s.implicits._
-        val lease = graft.core.ScratchDirs.lease("graft-warc-recrawl-")
-        try {
-          val docs = Tables.load(s, dir, "documents")
-            .select(col("doc_id").cast("long"), col("text"), col("lang"))
-            .as[(Long, String, String)]
-          val r8 = docs.filter(_._1 % 8 == 1).map { case (id, text, lang) =>
-            WarcShards.Entry(8, id, "response", s"http://example.com/doc/$id",
-              s"<urn:graft:resp:r8:$id>", "application/http;msgtype=response",
-              WarcShards.WarcCodec.httpResponse(
-                pageHtml(id, lang, text).getBytes(StandardCharsets.UTF_8),
-                "text/html; charset=utf-8"))
-          }
-          val r9 = docs.filter(_._1 % 8 == 5).map { case (id, text, lang) =>
-            WarcShards.Entry(9, id, "response", s"http://example.com/page/$id",
-              s"<urn:graft:resp:r9:$id>", "application/http;msgtype=response",
-              WarcShards.WarcCodec.httpResponse(
-                pageHtml(id, lang, text).getBytes(StandardCharsets.UTF_8),
-                "text/html; charset=utf-8"))
-          }
-          WarcShards.pack(r8, lease, gzip = false): Unit
-          WarcShards.pack(r9, lease, gzip = true): Unit
-          lease
-        } catch {
-          case e: Throwable =>
-            graft.core.ScratchDirs.release(lease)
-            throw e
-        }
-      })
+    stageShards("warc-recrawl", dir) {
+      import s.implicits._
+      val docs = Tables.load(s, dir, "documents")
+        .select(col("doc_id").cast("long"), col("text"), col("lang"))
+        .as[(Long, String, String)]
+      val r8 = docs.filter(_._1 % 8 == 1).map { case (id, text, lang) =>
+        WarcShards.Entry(8, id, "response", s"http://example.com/doc/$id",
+          s"<urn:graft:resp:r8:$id>", "application/http;msgtype=response",
+          WarcShards.WarcCodec.httpResponse(
+            pageHtml(id, lang, text).getBytes(StandardCharsets.UTF_8),
+            "text/html; charset=utf-8"))
+      }
+      val r9 = docs.filter(_._1 % 8 == 5).map { case (id, text, lang) =>
+        WarcShards.Entry(9, id, "response", s"http://example.com/page/$id",
+          s"<urn:graft:resp:r9:$id>", "application/http;msgtype=response",
+          WarcShards.WarcCodec.httpResponse(
+            pageHtml(id, lang, text).getBytes(StandardCharsets.UTF_8),
+            "text/html; charset=utf-8"))
+      }
+      r8.union(r9)
+    }
 
   /** Redirect shards for q254, staged once per JVM: planted 301/302
     * chains by doc_id % 4 cohort —
@@ -177,43 +164,31 @@ object WarcQueries {
     * Relative and absolute Location forms both planted; shard 0 plain,
     * shard 1 per-record gzip (both read paths in every run).
     */
-  private val redirectCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def materializeRedirects(s: SparkSession, dir: String): String =
-    redirectCache.computeIfAbsent(
-      "warc-redirects|" + java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString,
-      _ => {
-        import s.implicits._
-        val lease = graft.core.ScratchDirs.lease("graft-warc-redirects-")
-        try {
-          val ids = Tables.load(s, dir, "documents")
-            .select(col("doc_id").cast("long")).as[Long]
-          val entries = ids.flatMap { id =>
-            val shard = (id % 2).toInt
-            def red(sub: Int, path: String, status: Int, loc: String) =
-              WarcShards.Entry(shard, id * 4 + sub, "response",
-                s"http://example.com$path", s"<urn:graft:redir:$path:$id>",
-                "application/http;msgtype=response",
-                WarcShards.WarcCodec.httpRedirect(status, loc))
-            (id % 4) match {
-              case 0 => Seq(red(0, s"/r/$id", 301, s"/doc/$id"))
-              case 1 => Seq(red(0, s"/r/$id", 302, s"/m/$id"),
-                red(1, s"/m/$id", 301, s"http://example.com/final/$id"))
-              case 2 => Seq(red(0, s"/r/$id", 301,
-                s"http://other.example.org/x/$id"))
-              case _ => Seq(red(0, s"/r/$id", 301, s"/c/$id"),
-                red(1, s"/c/$id", 302, s"/r/$id"))
-            }
-          }
-          WarcShards.pack(entries.filter(_.shard == 0), lease, gzip = false): Unit
-          WarcShards.pack(entries.filter(_.shard == 1), lease, gzip = true): Unit
-          lease
-        } catch {
-          case e: Throwable =>
-            graft.core.ScratchDirs.release(lease)
-            throw e
+    stageShards("warc-redirects", dir) {
+      import s.implicits._
+      val ids = Tables.load(s, dir, "documents")
+        .select(col("doc_id").cast("long")).as[Long]
+      ids.flatMap { id =>
+        val shard = (id % 2).toInt
+        def red(sub: Int, path: String, status: Int, loc: String) =
+          WarcShards.Entry(shard, id * 4 + sub, "response",
+            s"http://example.com$path", s"<urn:graft:redir:$path:$id>",
+            "application/http;msgtype=response",
+            WarcShards.WarcCodec.httpRedirect(status, loc))
+        (id % 4) match {
+          case 0 => Seq(red(0, s"/r/$id", 301, s"/doc/$id"))
+          case 1 => Seq(red(0, s"/r/$id", 302, s"/m/$id"),
+            red(1, s"/m/$id", 301, s"http://example.com/final/$id"))
+          case 2 => Seq(red(0, s"/r/$id", 301,
+            s"http://other.example.org/x/$id"))
+          case _ => Seq(red(0, s"/r/$id", 301, s"/c/$id"),
+            red(1, s"/c/$id", 302, s"/r/$id"))
         }
-      })
+      }
+    }
+
+  private val RevalLastModified = "Sat, 01 Jun 2024 12:00:00 GMT"
 
   /** Revalidation fixture (q259/q260): per doc one 200 response
     * carrying cache validators by cohort — doc_id%3: 0 = strong ETag,
@@ -226,64 +201,49 @@ object WarcQueries {
     * byte-identical-capture dedup, reference WARC/1.1 §6.7.2 shape as
     * Common Crawl emits it). Shard 0 plain, shard 1 gzip.
     */
-  private val revalidationCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val RevalLastModified = "Sat, 01 Jun 2024 12:00:00 GMT"
-
   def materializeRevalidation(s: SparkSession, dir: String): String =
-    revalidationCache.computeIfAbsent(
-      "warc-reval|" + java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString,
-      _ => {
-        import s.implicits._
-        val lease = graft.core.ScratchDirs.lease("graft-warc-reval-")
-        try {
-          val ids = Tables.load(s, dir, "documents")
-            .select(col("doc_id").cast("long")).as[Long]
-          val entries = ids.flatMap { id =>
-            val shard = (id % 2).toInt
-            val uri = s"http://example.com/doc/$id"
-            val etag = (id % 3) match {
-              case 0 => "\"v" + id + "\""
-              case 1 => "W/\"v" + id + "\""
-              case _ => ""
-            }
-            val lm = if (id % 2 == 0) RevalLastModified else ""
-            val headers =
-              (if (etag.nonEmpty) Seq("ETag" -> etag) else Nil) ++
-                (if (lm.nonEmpty) Seq("Last-Modified" -> lm) else Nil)
-            val body = s"<html><body>doc $id</body></html>"
-              .getBytes(StandardCharsets.UTF_8)
-            val ok = WarcShards.Entry(shard, id * 3 + 1, "response", uri,
-              s"<urn:graft:reval:200:$id>",
-              "application/http;msgtype=response",
-              WarcShards.WarcCodec.httpResponse(body,
-                "text/html; charset=utf-8", headers))
-            val notMod =
-              if (id % 2 == 0)
-                Seq(WarcShards.Entry(shard, id * 3 + 2, "response", uri,
-                  s"<urn:graft:reval:304:$id>",
-                  "application/http;msgtype=response",
-                  WarcShards.WarcCodec.httpNotModified(etag, lm)))
-              else Nil
-            val revisit =
-              if (id % 3 == 0)
-                Seq(WarcShards.Entry(shard, id * 3 + 3, "revisit", uri,
-                  s"<urn:graft:reval:rev:$id>",
-                  "application/http;msgtype=response",
-                  ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
-                    s"ETag: $etag\r\n\r\n").getBytes(StandardCharsets.UTF_8),
-                  refersTo = s"<urn:graft:reval:200:$id>"))
-              else Nil
-            Seq(ok) ++ notMod ++ revisit
-          }
-          WarcShards.pack(entries.filter(_.shard == 0), lease, gzip = false): Unit
-          WarcShards.pack(entries.filter(_.shard == 1), lease, gzip = true): Unit
-          lease
-        } catch {
-          case e: Throwable =>
-            graft.core.ScratchDirs.release(lease)
-            throw e
+    stageShards("warc-reval", dir) {
+      import s.implicits._
+      val ids = Tables.load(s, dir, "documents")
+        .select(col("doc_id").cast("long")).as[Long]
+      ids.flatMap { id =>
+        val shard = (id % 2).toInt
+        val uri = s"http://example.com/doc/$id"
+        val etag = (id % 3) match {
+          case 0 => "\"v" + id + "\""
+          case 1 => "W/\"v" + id + "\""
+          case _ => ""
         }
-      })
+        val lm = if (id % 2 == 0) RevalLastModified else ""
+        val headers =
+          (if (etag.nonEmpty) Seq("ETag" -> etag) else Nil) ++
+            (if (lm.nonEmpty) Seq("Last-Modified" -> lm) else Nil)
+        val body = s"<html><body>doc $id</body></html>"
+          .getBytes(StandardCharsets.UTF_8)
+        val ok = WarcShards.Entry(shard, id * 3 + 1, "response", uri,
+          s"<urn:graft:reval:200:$id>",
+          "application/http;msgtype=response",
+          WarcShards.WarcCodec.httpResponse(body,
+            "text/html; charset=utf-8", headers))
+        val notMod =
+          if (id % 2 == 0)
+            Seq(WarcShards.Entry(shard, id * 3 + 2, "response", uri,
+              s"<urn:graft:reval:304:$id>",
+              "application/http;msgtype=response",
+              WarcShards.WarcCodec.httpNotModified(etag, lm)))
+          else Nil
+        val revisit =
+          if (id % 3 == 0)
+            Seq(WarcShards.Entry(shard, id * 3 + 3, "revisit", uri,
+              s"<urn:graft:reval:rev:$id>",
+              "application/http;msgtype=response",
+              ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
+                s"ETag: $etag\r\n\r\n").getBytes(StandardCharsets.UTF_8),
+              refersTo = s"<urn:graft:reval:200:$id>"))
+          else Nil
+        Seq(ok) ++ notMod ++ revisit
+      }
+    }
 
   /** Media-type fixture (q261): one 200 response per doc, the
     * Content-Type by cohort — doc_id%4: 0 = text/html page, 1 =
@@ -291,66 +251,52 @@ object WarcQueries {
     * Content-Type header at all (legacy servers). Shard 0 plain,
     * shard 1 gzip.
     */
-  private val mediaCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def materializeMediaTypes(s: SparkSession, dir: String): String =
-    mediaCache.computeIfAbsent(
-      "warc-media|" + java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString,
-      _ => {
-        import s.implicits._
-        val lease = graft.core.ScratchDirs.lease("graft-warc-media-")
-        try {
-          val ids = Tables.load(s, dir, "documents")
-            .select(col("doc_id").cast("long")).as[Long]
-          val entries = ids.flatMap { id =>
-            val shard = (id % 2).toInt
-            def e(path: String, payload: Array[Byte]) =
-              WarcShards.Entry(shard, id, "response",
-                s"http://example.com$path", s"<urn:graft:media:$id>",
-                "application/http;msgtype=response", payload)
-            val main = (id % 4) match {
-              case 0 => e(s"/doc/$id", WarcShards.WarcCodec.httpResponse(
-                s"<html><body>doc $id</body></html>"
-                  .getBytes(StandardCharsets.UTF_8),
-                "text/html; charset=utf-8"))
-              case 1 => e(s"/img/$id.png", WarcShards.WarcCodec.httpResponse(
-                Array.fill[Byte]((id % 50 + 10).toInt)((id % 251).toByte),
-                "image/png"))
-              case 2 => e(s"/pdf/$id", WarcShards.WarcCodec.httpResponse(
-                Array.fill[Byte]((id % 25 + 5).toInt)(37.toByte),
-                "application/pdf"))
-              case _ =>
-                val body = s"plain doc $id".getBytes(StandardCharsets.UTF_8)
-                val h = s"HTTP/1.1 200 OK\r\nContent-Length: ${body.length}\r\n\r\n"
-                  .getBytes(StandardCharsets.UTF_8)
-                e(s"/raw/$id", h ++ body)
-            }
-            // brotli cohort: a text/html 200 whose body rides
-            // `Content-Encoding: br` — the JDK has no brotli codec, so
-            // the reader must SURFACE the token (body left compressed)
-            // and the loop fence it out of extraction
-            val br =
-              if (id % 7 == 0) {
-                val payload = Array.fill[Byte]((id % 30 + 5).toInt)(66.toByte)
-                val h = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
-                  "Content-Encoding: br\r\n" +
-                  s"Content-Length: ${payload.length}\r\n\r\n")
-                  .getBytes(StandardCharsets.UTF_8)
-                Seq(WarcShards.Entry(shard, id + 1000000L, "response",
-                  s"http://example.com/br/$id", s"<urn:graft:media:br:$id>",
-                  "application/http;msgtype=response", h ++ payload))
-              } else Nil
-            Seq(main) ++ br
-          }
-          WarcShards.pack(entries.filter(_.shard == 0), lease, gzip = false): Unit
-          WarcShards.pack(entries.filter(_.shard == 1), lease, gzip = true): Unit
-          lease
-        } catch {
-          case e: Throwable =>
-            graft.core.ScratchDirs.release(lease)
-            throw e
+    stageShards("warc-media", dir) {
+      import s.implicits._
+      val ids = Tables.load(s, dir, "documents")
+        .select(col("doc_id").cast("long")).as[Long]
+      ids.flatMap { id =>
+        val shard = (id % 2).toInt
+        def e(path: String, payload: Array[Byte]) =
+          WarcShards.Entry(shard, id, "response",
+            s"http://example.com$path", s"<urn:graft:media:$id>",
+            "application/http;msgtype=response", payload)
+        val main = (id % 4) match {
+          case 0 => e(s"/doc/$id", WarcShards.WarcCodec.httpResponse(
+            s"<html><body>doc $id</body></html>"
+              .getBytes(StandardCharsets.UTF_8),
+            "text/html; charset=utf-8"))
+          case 1 => e(s"/img/$id.png", WarcShards.WarcCodec.httpResponse(
+            Array.fill[Byte]((id % 50 + 10).toInt)((id % 251).toByte),
+            "image/png"))
+          case 2 => e(s"/pdf/$id", WarcShards.WarcCodec.httpResponse(
+            Array.fill[Byte]((id % 25 + 5).toInt)(37.toByte),
+            "application/pdf"))
+          case _ =>
+            val body = s"plain doc $id".getBytes(StandardCharsets.UTF_8)
+            val h = s"HTTP/1.1 200 OK\r\nContent-Length: ${body.length}\r\n\r\n"
+              .getBytes(StandardCharsets.UTF_8)
+            e(s"/raw/$id", h ++ body)
         }
-      })
+        // brotli cohort: a text/html 200 whose body rides
+        // `Content-Encoding: br` — the JDK has no brotli codec, so
+        // the reader must SURFACE the token (body left compressed)
+        // and the loop fence it out of extraction
+        val br =
+          if (id % 7 == 0) {
+            val payload = Array.fill[Byte]((id % 30 + 5).toInt)(66.toByte)
+            val h = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
+              "Content-Encoding: br\r\n" +
+              s"Content-Length: ${payload.length}\r\n\r\n")
+              .getBytes(StandardCharsets.UTF_8)
+            Seq(WarcShards.Entry(shard, id + 1000000L, "response",
+              s"http://example.com/br/$id", s"<urn:graft:media:br:$id>",
+              "application/http;msgtype=response", h ++ payload))
+          } else Nil
+        Seq(main) ++ br
+      }
+    }
 
   /** Charset fixture (q262/q263): one text/plain 200 per doc whose
     * BYTES are encoded in the charset its Content-Type declares —
@@ -362,59 +308,45 @@ object WarcQueries {
     * with doc_id%5=0 add a TRUNCATED capture at `/t/<id>`
     * (`WARC-Truncated: length`). Shard 0 plain, shard 1 gzip.
     */
-  private val charsetCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def materializeCharsets(s: SparkSession, dir: String): String =
-    charsetCache.computeIfAbsent(
-      "warc-charsets|" + java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString,
-      _ => {
-        import s.implicits._
-        val lease = graft.core.ScratchDirs.lease("graft-warc-charsets-")
-        try {
-          val ids = Tables.load(s, dir, "documents")
-            .select(col("doc_id").cast("long")).as[Long]
-          val entries = ids.flatMap { id =>
-            val shard = (id % 2).toInt
-            def e(ord: Long, path: String, payload: Array[Byte],
-                truncated: String = "") =
-              WarcShards.Entry(shard, ord, "response",
-                s"http://example.com$path", s"<urn:graft:cs:$path:$id>",
-                "application/http;msgtype=response", payload,
-                truncated = truncated)
-            val (text, wire, label) = (id % 4) match {
-              case 0 => (s"café número $id — €",
-                "UTF-8", "utf-8")
-              case 1 => (s"café número $id ±",
-                "ISO-8859-1", "iso-8859-1")
-              case 2 => (s"café € $id œ",
-                "windows-1252", "windows-1252")
-              // mislabel: UTF-8 bytes, iso-8859-1 label — decodes to
-              // deterministic mojibake (é = C3 A9 → Ã©)
-              case _ => (s"café $id", "UTF-8", "iso-8859-1")
-            }
-            val main = e(id * 2, s"/doc/$id",
-              WarcShards.WarcCodec.httpResponse(
-                text.getBytes(java.nio.charset.Charset.forName(wire)),
-                s"text/plain; charset=$label"))
-            val trunc =
-              if (id % 5 == 0)
-                Seq(e(id * 2 + 1, s"/t/$id",
-                  WarcShards.WarcCodec.httpResponse(
-                    "partial co".getBytes(StandardCharsets.UTF_8),
-                    "text/html"),
-                  truncated = "length"))
-              else Nil
-            Seq(main) ++ trunc
-          }
-          WarcShards.pack(entries.filter(_.shard == 0), lease, gzip = false): Unit
-          WarcShards.pack(entries.filter(_.shard == 1), lease, gzip = true): Unit
-          lease
-        } catch {
-          case e: Throwable =>
-            graft.core.ScratchDirs.release(lease)
-            throw e
+    stageShards("warc-charsets", dir) {
+      import s.implicits._
+      val ids = Tables.load(s, dir, "documents")
+        .select(col("doc_id").cast("long")).as[Long]
+      ids.flatMap { id =>
+        val shard = (id % 2).toInt
+        def e(ord: Long, path: String, payload: Array[Byte],
+            truncated: String = "") =
+          WarcShards.Entry(shard, ord, "response",
+            s"http://example.com$path", s"<urn:graft:cs:$path:$id>",
+            "application/http;msgtype=response", payload,
+            truncated = truncated)
+        val (text, wire, label) = (id % 4) match {
+          case 0 => (s"café número $id — €",
+            "UTF-8", "utf-8")
+          case 1 => (s"café número $id ±",
+            "ISO-8859-1", "iso-8859-1")
+          case 2 => (s"café € $id œ",
+            "windows-1252", "windows-1252")
+          // mislabel: UTF-8 bytes, iso-8859-1 label — decodes to
+          // deterministic mojibake (é = C3 A9 → Ã©)
+          case _ => (s"café $id", "UTF-8", "iso-8859-1")
         }
-      })
+        val main = e(id * 2, s"/doc/$id",
+          WarcShards.WarcCodec.httpResponse(
+            text.getBytes(java.nio.charset.Charset.forName(wire)),
+            s"text/plain; charset=$label"))
+        val trunc =
+          if (id % 5 == 0)
+            Seq(e(id * 2 + 1, s"/t/$id",
+              WarcShards.WarcCodec.httpResponse(
+                "partial co".getBytes(StandardCharsets.UTF_8),
+                "text/html"),
+              truncated = "length"))
+          else Nil
+        Seq(main) ++ trunc
+      }
+    }
 
   /** Domain-curation fixture: each doc gets a host by doc_id % 6 — two
     * subdomains (one case-mangled) per registered domain, three

@@ -23,40 +23,23 @@ import graft.core.ScratchDirs
   */
 object StreamingQueries {
 
-  /** Watched-dir INPUTS are staged once per JVM per sf dir (the
-    * MultimodalQueries corpus-cache pattern, keyed on the normalized
-    * absolute path): the input files never change across invocations,
-    * and bench runs each query cold+3×warm — without the cache every
-    * run would re-write the events table into scratch, and the timer
-    * would measure fixture writes instead of the stream. The cached
-    * lease is held for the JVM lifetime; per-invocation scratch holds
-    * only sink / checkpoint / table dirs (fresh checkpoints are what
-    * let the same input dir stream repeatedly).
+  /** Watched-dir INPUTS are staged once per JVM per sf dir
+    * ([[ScratchDirs.staged]]): the input files never change across
+    * invocations, and bench runs each query cold+3×warm — without the
+    * cache every run would re-write the events table into scratch, and
+    * the timer would measure fixture writes instead of the stream.
+    * Per-invocation scratch holds only sink / checkpoint / table dirs
+    * (fresh checkpoints are what let the same input dir stream
+    * repeatedly).
     */
-  private val stagedInputCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def stagedInput(dir: String, name: String)(
       build: String => Unit): String =
-    stagedInputCache.computeIfAbsent(
-      name + "|" + java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString,
-      _ => {
-        val lease = ScratchDirs.lease(s"graft-$name-")
-        // Release-on-failure between lease and return (the
-        // materializeGifCorpus pattern): a throw from the staging
-        // writes must not pin the lease forever.
-        try { val in = s"$lease/in"; build(in); in }
-        catch {
-          case e: Throwable =>
-            ScratchDirs.release(lease)
-            throw e
-        }
-      })
+    ScratchDirs.staged(name, dir) { lease => val in = s"$lease/in"; build(in); in }
 
   /** Shared q82/q86/q140/q145/q183/q189 setup — one recipe, many sinks:
     * the events table plus a second batch of planted exact-duplicate
     * files (a copy of every 10th event) in a watched dir (staged once
-    * per JVM, see [[stagedInputCache]]), and a schema'd readStream over
+    * per JVM, see [[stagedInput]]), and a schema'd readStream over
     * it. `ts` normalization (nanos-long OR µs-NTZ parquet →
     * TimestampType, see sources.Tables) happens on the BATCH load
     * before staging, so the staged files are always TIMESTAMP_MICROS

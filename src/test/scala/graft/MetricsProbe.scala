@@ -54,7 +54,7 @@ object MetricsProbe {
       val t0 = System.nanoTime()
       val r = body
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      org.apache.spark.GraftBusDrain.drain(sc)
+      org.apache.spark.sql.GraftPlanBridge.awaitListeners(spark)
       Measured(r, wallMs,
         probe.shuffleRead.get, probe.shuffleWrite.get,
         probe.peakTaskInput.get, probe.peakTaskShuffleRead.get)

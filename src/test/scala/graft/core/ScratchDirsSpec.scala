@@ -43,4 +43,24 @@ class ScratchDirsSpec extends AnyFunSuite {
     (1 to 32).foreach(_ => ScratchDirs.fresh("scratch-churn", keep = 2))
     assert(!f.exists(), "a released dir must become reap-eligible by count")
   }
+
+  test("staged: a failed build releases its lease and is not cached") {
+    var leased = ""
+    intercept[IllegalStateException] {
+      ScratchDirs.staged("spec-fail", "sf-spec") { d => leased = d; throw new IllegalStateException("boom") }
+    }
+    (1 to 32).foreach(_ => ScratchDirs.fresh("scratch-churn", keep = 2))
+    assert(!new java.io.File(leased).exists(), "a failed build must release its lease")
+    var builds = 0
+    ScratchDirs.staged("spec-fail", "sf-spec") { d => builds += 1; d }
+    assert(builds == 1, "a failed build must not be cached")
+  }
+
+  test("staged: dir, dir/, ./dir and the absolute dir hit one entry") {
+    var builds = 0
+    val spellings = Seq("sf-spec", "sf-spec/", "./sf-spec",
+      new java.io.File("sf-spec").getAbsolutePath)
+    val staged = spellings.map(ScratchDirs.staged("spec-spelling", _) { d => builds += 1; d })
+    assert(staged.distinct.size == 1 && builds == 1)
+  }
 }

@@ -123,13 +123,12 @@ object Bench {
   /** The battery's one listener. Jobs are attributed by the description
     * of their SQL execution, which carries the action's own call site
     * (e.g. "localCheckpoint at IncrementalIngest.scala:180"), falling back
-    * to the job's `callSite` property. Both come from thread-locals, so a
-    * job started from a pooled thread can carry the description that
-    * thread inherited when it was created (a ForkJoinPool worker born
-    * under one stream labels later Futures with that stream's id); the
-    * counts are exact, the call-site table is a guide. [[open]] and
-    * [[close]] drain the listener bus, so call both outside any timed
-    * window.
+    * to the job's `callSite` property. Both come from thread-locals; jobs
+    * the engine starts from driver threads go through
+    * [[graft.core.Overlap]], which runs them with the submitting thread's
+    * properties, so they carry their own stream's description and call
+    * site, never one a pooled thread inherited. [[open]] and [[close]]
+    * drain the listener bus, so call both outside any timed window.
     */
   final class Meter extends SparkListener {
     private val execDesc = mutable.HashMap.empty[Long, String]

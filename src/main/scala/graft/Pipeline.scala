@@ -1334,32 +1334,41 @@ object Pipeline {
         graft.sources.WarcShards.readRecordsStream(spark, inDir, filesPerDrain))
         .writeStream
         .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-          // fault injection FIRST: a prior drain's offsets are already
-          // committed, so failing here opens exactly the window the
-          // delta protocol covers (committed batches whose state would
-          // otherwise live only in memory)
-          if (failAfter > 0 && drains.get >= failAfter)
-            throw new RuntimeException(
-              s"injected failure after $failAfter drain(s) " +
-                "(crawl.fail_after_drains)")
-          // AvailableNow can fire an empty timeout batch — skip it; the
-          // emptiness check rides the batch's own checkpoint job
-          val (batch, nRecs) = graft.core.Durable.materializeCounted(batch0)
-          if (nRecs > 0) {
-            val sp = batch0.sparkSession
-            import sp.implicits._
-            val (c, surv, frontier, aliases, assets) =
-              stageCounts(batch, Some(batchId))
-            for ((dir, df) <- Seq(
-                "docs" -> surv.select(col("doc_id"), col("uri"), col("text")),
-                "frontier" -> frontier.select(col("target"), col("etag"), col("last_modified")),
-                "aliases" -> aliases, "assets" -> assets,
-                "drains" -> Seq(c).toDF().select(lit(batchId).as("batch_id"), col("*"))))
-              graft.streaming.ExactlyOnce.appendKeyed(df, s"$out/$dir", batchId)
-            drains.incrementAndGet(): Unit
-            ingested.addAndGet(c.n_survivors): Unit
-            state.set(store.maintain(state.get, batchId, policy))
-          }
+          // every delta write the drain started lands before this batch's
+          // offset commit, even when the drain fails
+          try {
+            // fault injection FIRST: a prior drain's offsets are already
+            // committed, so failing here opens exactly the window the
+            // delta protocol covers (committed batches whose state would
+            // otherwise live only in memory)
+            if (failAfter > 0 && drains.get >= failAfter)
+              throw new RuntimeException(
+                s"injected failure after $failAfter drain(s) " +
+                  "(crawl.fail_after_drains)")
+            // AvailableNow can fire an empty timeout batch — skip it; the
+            // emptiness check rides the batch's own checkpoint job
+            val (batch, nRecs) = graft.core.Durable.materializeCounted(batch0)
+            if (nRecs > 0) {
+              val sp = batch0.sparkSession
+              import sp.implicits._
+              val (c, surv, frontier, aliases, assets) =
+                stageCounts(batch, Some(batchId))
+              // the five output tables are independent: their writes overlap
+              graft.core.Overlap.all(Seq(
+                  "docs" -> surv.select(col("doc_id"), col("uri"), col("text")),
+                  "frontier" -> frontier.select(col("target"), col("etag"),
+                    col("last_modified")),
+                  "aliases" -> aliases, "assets" -> assets,
+                  "drains" -> Seq(c).toDF().select(lit(batchId).as("batch_id"), col("*")))
+                .map { case (dir, df) => () =>
+                  graft.streaming.ExactlyOnce.appendKeyed(df, s"$out/$dir", batchId) }): Unit
+              state.set(store.maintain(state.get, batchId, policy))
+              // a drain counts once its deltas landed
+              store.flush()
+              drains.incrementAndGet(): Unit
+              ingested.addAndGet(c.n_survivors): Unit
+            }
+          } finally store.flush()
         }
         .option("checkpointLocation", ckptDir)
         .trigger(Trigger.AvailableNow())

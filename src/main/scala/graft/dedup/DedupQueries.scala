@@ -304,25 +304,19 @@ object DedupQueries {
         val drained = new java.util.concurrent.atomic.AtomicLong(0L)
         // stage all four shard files UP FRONT into tmp dirs outside the
         // watched inDir — four independent writes of the checkpointed
-        // `all`, run CONCURRENTLY from driver threads (§2.6) instead of
-        // one driver-sequenced write job per drain. Each loop iteration
+        // `all`, overlapped ([[graft.core.Overlap]]) instead of one
+        // driver-sequenced write job per drain. Each loop iteration
         // below only MOVES one file in, so arrival order and the
         // one-new-file-per-drain invariant are byte-identical.
-        val parts = {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          Await.result(Future.sequence((0 until 4).map { k =>
-            Future {
-              val tmp = s"$scratch/tmp_$k"
-              all.filter(col("doc_id") % 4 === k)
-                .coalesce(1).write.mode("overwrite").parquet(tmp)
-              new java.io.File(tmp).listFiles()
-                .find(f => f.getName.startsWith("part-") &&
-                  f.getName.endsWith(".parquet"))
-                .getOrElse(sys.error(s"no parquet part file in $tmp"))
-            }
-          }), scala.concurrent.duration.Duration.Inf)
-        }
+        val parts = graft.core.Overlap.all((0 until 4).map { k => () =>
+          val tmp = s"$scratch/tmp_$k"
+          all.filter(col("doc_id") % 4 === k)
+            .coalesce(1).write.mode("overwrite").parquet(tmp)
+          new java.io.File(tmp).listFiles()
+            .find(f => f.getName.startsWith("part-") &&
+              f.getName.endsWith(".parquet"))
+            .getOrElse(sys.error(s"no parquet part file in $tmp"))
+        })
         (0 until 4).foreach { k =>
           // shard k ARRIVES: one new file in the watched dir, then drain
           java.nio.file.Files.move(parts(k).toPath,

@@ -233,20 +233,16 @@ object MinHashDedup {
     */
   def compactIndex(index: Index, dir: String): Index = {
     val spark = index.buckets.sparkSession
-    // The three frames are independent — their writes run CONCURRENTLY
-    // from driver threads (guide §2.6: actions are only sequential
-    // because the driver calls them sequentially), so one compaction
-    // costs ~the largest frame's write instead of the sum of three, and
-    // the tails of each write's stage back-fill the others' idle cores.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // The three frames are independent — their writes overlap
+    // ([[graft.core.Overlap]]), so one compaction costs ~the largest
+    // frame's write instead of the sum of three, and the tails of each
+    // write's stage back-fill the others' idle cores.
     def path(name: String) = s"${dir.stripSuffix("/")}/$name"
-    val writes = Seq(
+    graft.core.Overlap.all(Seq(
       "buckets" -> index.buckets, "sets" -> index.sets,
       "text_hashes" -> index.textHashes).map { case (name, df) =>
-      Future(df.write.mode("overwrite").parquet(path(name)))
-    }
-    Await.result(Future.sequence(writes), scala.concurrent.duration.Duration.Inf)
+      () => df.write.mode("overwrite").parquet(path(name))
+    }): Unit
     index.copy(
       buckets = spark.read.parquet(path("buckets")),
       sets = spark.read.parquet(path("sets")),

@@ -59,6 +59,15 @@ object CrawlState {
     *    deltas but crashed before its offset commit REPLAYS, and the
     *    replay rewrites them idempotently;
     *  - `epoch_<batchId>/`: the in-loop compactions of [[maintain]].
+    *
+    * Independent reads and writes overlap ([[graft.core.Overlap]]):
+    * restore loads the pieces concurrently, [[advance]] starts a drain's
+    * delta writes and rolls on without them (the roll folds the
+    * in-memory delta, never the written files), and [[commit]] saves the
+    * pieces concurrently. Ordering: the drain calls [[flush]] before
+    * `foreachBatch` returns, so all of its deltas (and its outputs) land
+    * before the offset commit and a straggling write never races the
+    * batch's replay; every piece lands before `_COMMITTED`.
     */
   final class Store(spark: SparkSession, out: String, ckptDir: String,
       changeAware: Boolean, robotsSeed: Option[String],
@@ -283,15 +292,23 @@ object CrawlState {
       RobotsTxt.delayFor(RobotsTxt.parseDelays(robots, "host", "body"), agent)
         .localCheckpoint())
 
-    /** `v<N>` plus the committed deltas; effective rules start as parsed. */
+    /** `v<N>` plus the committed deltas, each piece loaded concurrently;
+      * effective rules start as parsed. */
     def restore(): CrawlState = {
-      val (seen, emitted, index) = (restored(Seen), restored(Emitted), restored(Index))
-      val (robots, sitemaps, graph) = (restored(Robots), restored(Sitemaps), restoredGraph)
-      val (recrawl, validators) = (restored(Recrawl), restored(Validators))
-      val (control, robotsErr) = (restored(Control), restored(RobotsErr))
-      val (rules, delays) = robotsRules(robots)
-      CrawlState(seen, emitted, index, robots, sitemaps, graph, recrawl,
-        validators, control, robotsErr, restored(HostRanks), rules, delays, rules)
+      import graft.core.Overlap.start
+      val (seen, emitted, index) =
+        (start(restored(Seen)), start(restored(Emitted)), start(restored(Index)))
+      val robots = start { val r = restored(Robots); (r, robotsRules(r)) }
+      val (sitemaps, graph, ranks) =
+        (start(restored(Sitemaps)), start(restoredGraph), start(restored(HostRanks)))
+      val (recrawl, validators) = (start(restored(Recrawl)), start(restored(Validators)))
+      val (control, robotsErr) = (start(restored(Control)), start(restored(RobotsErr)))
+      graft.core.Overlap.awaitAll(Seq(seen, emitted, index, robots, sitemaps, graph,
+        ranks, recrawl, validators, control, robotsErr))
+      val (robotsNow, (rules, delays)) = robots.join()
+      CrawlState(seen.join(), emitted.join(), index.join(), robotsNow, sitemaps.join(),
+        graph.join(), recrawl.join(), validators.join(), control.join(),
+        robotsErr.join(), ranks.join(), rules, delays, rules)
     }
 
     /** `rules` and `delays` re-derived after robots rolled. */
@@ -300,13 +317,31 @@ object CrawlState {
       s.copy(rules = rules, delays = delays)
     }
 
-    /** The live drain's step for one piece: write its batchId-keyed
-      * delta (none on the dry run, `batchId = None`), then roll. */
+    // delta dir -> its write in flight, until [[flush]]
+    private val writing =
+      new java.util.concurrent.ConcurrentHashMap[String, graft.core.Overlap.Pending[Unit]]()
+
+    /** The live drain's step for one piece: start writing its
+      * batchId-keyed delta (none on the dry run, `batchId = None`), then
+      * roll without waiting for the write. */
     def advance[A, D](s: CrawlState, p: Piece[A, D], d: D,
         batchId: Option[Long]): CrawlState = {
-      for (b <- batchId; (dir, part) <- p.deltaDirs.zip(p.parts(d)))
-        graft.streaming.ExactlyOnce.appendKeyed(part, deltaDir(dir), b)
+      for (b <- batchId; (dir, part) <- p.deltaDirs.zip(p.parts(d))) {
+        // a second write to one dir overwrites the same partition: it
+        // waits for the first
+        Option(writing.get(dir)).foreach(_.join())
+        writing.put(dir, graft.core.Overlap.start(
+          graft.streaming.ExactlyOnce.appendKeyed(part, deltaDir(dir), b)))
+      }
       p.set(s, p.roll(p.get(s), d, batchId.getOrElse(0L)))
+    }
+
+    /** Wait until every delta write [[advance]] started has landed; after
+      * all of them finish, rethrow the first failure. */
+    def flush(): Unit = {
+      import scala.jdk.CollectionConverters._
+      graft.core.Overlap.awaitAll(
+        writing.keySet.asScala.toSeq.flatMap(dir => Option(writing.remove(dir))))
     }
 
     /** On the compaction cadence: epoch compactions bound index and
@@ -315,19 +350,26 @@ object CrawlState {
     def maintain(s: CrawlState, batchId: Long,
         policy: graft.core.CompactionPolicy): CrawlState = {
       def epoch(p: Piece[_, _]) = s"$root/epoch_$batchId/${p.name}"
-      val index = policy.maybe(batchId, s.index)(MinHashDedup.compactIndex(_, epoch(Index)))
-      val seen = policy.maybe(batchId, s.seen)(UrlSeenSet.compact(_, epoch(Seen)))
-      s.copy(index = index, seen = seen, hostRanks = policy.maybe(
+      // the two compactions touch independent state: they overlap
+      val index = graft.core.Overlap.start(
+        policy.maybe(batchId, s.index)(MinHashDedup.compactIndex(_, epoch(Index))))
+      val seen = graft.core.Overlap.start(
+        policy.maybe(batchId, s.seen)(UrlSeenSet.compact(_, epoch(Seen))))
+      graft.core.Overlap.awaitAll(Seq(index, seen))
+      s.copy(index = index.join(), seen = seen.join(), hostRanks = policy.maybe(
         batchId, s.hostRanks)(HostRanks.roll(_, s.hostGraph, batchId)))
     }
 
-    /** Commit `v<N+1>` (pieces, then `_COMMITTED` naming the last batch
-      * the checkpoint committed — every one of them is folded into `s`);
-      * reap `v<N>`, the deltas and the epoch dirs. Returns N+1. */
+    /** Commit `v<N+1>` (every pending delta, then the pieces
+      * concurrently, then — once all of them landed — `_COMMITTED` naming
+      * the last batch the checkpoint committed, every one of them folded
+      * into `s`); reap `v<N>`, the deltas and the epoch dirs. Returns
+      * N+1. */
     def commit(s: CrawlState): Int = {
+      flush()
       val next = restoredV.fold(0)(_ + 1)
       def save[A](p: Piece[A, _]): Unit = p.save(p.get(s), s"$root/v$next/${p.name}")
-      pieces.foreach(save(_))
+      graft.core.Overlap.all(pieces.map(p => () => save(p))): Unit
       val marker = fs.create(new Path(s"$root/v$next/_COMMITTED"), true)
       try marker.write(lastCommitted.fold("")(_.toString).getBytes("UTF-8"))
       finally marker.close()

@@ -780,18 +780,18 @@ object WarcQueries {
                   // index maintenance, live in the loop (reads precede
                   // the scratch release below) — one CompactionPolicy
                   // drives BOTH rolling indexes; the two compactions
-                  // touch independent state, so they run CONCURRENTLY
-                  // from driver threads (§2.6): a compaction drain costs
+                  // touch independent state, so they overlap
+                  // ([[graft.core.Overlap]]): a compaction drain costs
                   // ~the larger write instead of the sum of both
-                  import scala.concurrent.{Await, Future}
-                  import scala.concurrent.ExecutionContext.Implicits.global
-                  val fIdx = Future(compaction.maybe(ord.toLong, indexRef.get)(
-                    graft.dedup.MinHashDedup.compactIndex(_, s"$scratch/idx_$ord")))
-                  val fSeen = Future(compaction.maybe(ord.toLong, seenRef.get)(
-                    graft.dedup.UrlSeenSet.compact(_, s"$scratch/seen_$ord")))
-                  val inf = scala.concurrent.duration.Duration.Inf
-                  indexRef.set(Await.result(fIdx, inf))
-                  seenRef.set(Await.result(fSeen, inf))
+                  val idx = graft.core.Overlap.start(
+                    compaction.maybe(ord.toLong, indexRef.get)(
+                      graft.dedup.MinHashDedup.compactIndex(_, s"$scratch/idx_$ord")))
+                  val seen = graft.core.Overlap.start(
+                    compaction.maybe(ord.toLong, seenRef.get)(
+                      graft.dedup.UrlSeenSet.compact(_, s"$scratch/seen_$ord")))
+                  graft.core.Overlap.awaitAll(Seq(idx, seen))
+                  indexRef.set(idx.join())
+                  seenRef.set(seen.join())
                 }
               }
             }
@@ -2299,21 +2299,17 @@ object WarcQueries {
                 // exactly-once ledger/survivor semantics under retry
                 // ([[graft.streaming.ExactlyOnce]], the r13 ADVICE item).
                 // The two sinks are independent directories, so their
-                // writes run CONCURRENTLY from driver threads (§2.6): the
-                // tiny ledger job hides inside the survivor write.
-                import scala.concurrent.{Await, Future}
-                import scala.concurrent.ExecutionContext.Implicits.global
-                val fSink = Future(graft.streaming.ExactlyOnce.appendKeyed(
-                  surv.select(col("doc_id")), sinkDir, batchId))
-                val fLedger = Future(graft.streaming.ExactlyOnce.appendKeyed(
-                  Seq((shards.head, nBatch, counts(0), counts(1), counts(2),
-                    counts(3)))
-                    .toDF("shard", "n_batch", "n_after_url", "n_after_exact",
-                      "n_after_intra", "n_survivors"),
-                  ledgerDir, batchId))
-                val inf = scala.concurrent.duration.Duration.Inf
-                Await.result(fSink, inf): Unit
-                Await.result(fLedger, inf): Unit
+                // writes overlap ([[graft.core.Overlap]]): the tiny
+                // ledger job hides inside the survivor write.
+                val ledgerRow = Seq((shards.head, nBatch, counts(0), counts(1),
+                    counts(2), counts(3)))
+                  .toDF("shard", "n_batch", "n_after_url", "n_after_exact",
+                    "n_after_intra", "n_survivors")
+                graft.core.Overlap.all(Seq(
+                  () => graft.streaming.ExactlyOnce.appendKeyed(
+                    surv.select(col("doc_id")), sinkDir, batchId),
+                  () => graft.streaming.ExactlyOnce.appendKeyed(
+                    ledgerRow, ledgerDir, batchId))): Unit
               }
             }
           }

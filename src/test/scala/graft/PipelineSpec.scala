@@ -766,6 +766,80 @@ class PipelineSpec extends SparkSpec {
       s"recrawl differs: uninterrupted-only ${onlyA.toSeq}, restarted-only ${onlyB.toSeq}")
   }
 
+  test("a failed delta write fails the drain before its offset commit; " +
+      "the rerun commits the same state as an uninterrupted run") {
+    import spark.implicits._
+    val (s, t) = ("dw.example.org", "dx.example.org")
+    def entry(shard: Int, ord: Long, host: String, path: String, text: String,
+        links: String*) =
+      graft.sources.WarcShards.Entry(shard, ord, "response",
+        s"http://$host$path", s"<urn:test:deltawrite:$shard:$ord>",
+        "application/http;msgtype=response",
+        graft.sources.WarcShards.WarcCodec.httpResponse(
+          ("<html><head><title>t</title></head><body><nav>" +
+            links.map(l => s"""<a href="$l">x</a>""").mkString(" ") +
+            "</nav><p>" + text + "</p></body></html>").getBytes("UTF-8"),
+          "text/html; charset=utf-8"))
+    val drop0 = Seq(
+      entry(0, 1, s, "/a/1", "the alpha page talks about mountains and rivers flowing north",
+        "/a/2", s"http://$t/b/1"))
+    val drop1 = Seq(
+      entry(1, 1, s, "/a/2", "a second page describing oceans tides and the salty breeze",
+        "/a/3", s"http://$t/b/2"),
+      entry(1, 2, t, "/b/1", "completely different words about the weather in marseille now",
+        s"http://$s/a/4"))
+    val flags = Pipeline.parseCrawlArgs(Seq("--files-per-drain", "1", "--recrawl-base", "1"))
+    def crawlDrop(in: String, out: String, drop: Seq[graft.sources.WarcShards.Entry]) = {
+      val stage = tmpDir("deltawrite-stage")
+      graft.sources.WarcShards.pack(drop.toDS(), stage): Unit
+      val shard = f"shard-${drop.head.shard}%05d.warc"
+      java.nio.file.Files.copy(java.nio.file.Paths.get(stage, shard),
+        java.nio.file.Paths.get(in, shard)): Unit
+      Pipeline.crawl(spark, in, out, args = flags)
+    }
+
+    val (inA, outA) = (tmpDir("deltawrite-a-in"), tmpDir("deltawrite-a-out"))
+    assert(crawlDrop(inA, outA, drop0).stateVersion.contains(0))
+    val clean = crawlDrop(inA, outA, drop1)
+    assert(clean.status == "success" && clean.stateVersion.contains(1),
+      s"uninterrupted run: $clean")
+
+    val (inB, outB) = (tmpDir("deltawrite-b-in"), tmpDir("deltawrite-b-out"))
+    assert(crawlDrop(inB, outB, drop0).stateVersion.contains(0))
+    // the obstruction: a dangling link where drain 1's seen delta goes.
+    // Restore sees no delta there; the write cannot create its directory
+    val link = java.nio.file.Paths.get(s"$outB/state/deltas/seen")
+    java.nio.file.Files.createDirectories(link.getParent)
+    java.nio.file.Files.createSymbolicLink(link,
+      java.nio.file.Paths.get(tmpDir("deltawrite-nowhere"), "absent"))
+    val failed = crawlDrop(inB, outB, drop1)
+    assert(failed.status == "failed" && failed.drains == 0L,
+      s"the drain whose delta write failed must fail: $failed")
+    assert(new java.io.File(s"$outB/ckpt/offsets/1").exists() &&
+      !new java.io.File(s"$outB/ckpt/commits/1").exists(),
+      "the failed drain must stop before its offset commit")
+    assert(!new java.io.File(s"$outB/state/v1/_COMMITTED").exists(),
+      "no state commit after a failed delta write")
+    assert(new java.io.File(s"$outB/state/deltas/hostgraph").isDirectory,
+      "the drain's other delta writes must have finished before it failed")
+
+    java.nio.file.Files.delete(link)
+    val rerun = Pipeline.crawl(spark, inB, outB, args = flags)
+    assert(rerun.status == "success" && rerun.drains == 1L &&
+      rerun.stateVersion.contains(1), s"rerun: $rerun")
+    for (p <- Seq("seen/url_hashes", "emitted/url_hashes", "index/buckets",
+        "index/sets", "index/text_hashes", "hostgraph", "recrawl")) {
+      val a = spark.read.parquet(s"$outA/state/v1/$p")
+      val b = spark.read.parquet(s"$outB/state/v1/$p")
+        .select(a.columns.map(col).toSeq: _*)
+      assert(!a.isEmpty, s"fixture leaves state piece $p empty")
+      val (onlyA, onlyB) = (a.exceptAll(b).collect(), b.exceptAll(a).collect())
+      assert(onlyA.isEmpty && onlyB.isEmpty,
+        s"state piece $p differs after the failed write and rerun: " +
+          s"uninterrupted-only ${onlyA.toSeq}, rerun-only ${onlyB.toSeq}")
+    }
+  }
+
   test("a repeated crawl call reuses the classes the first call compiled") {
     import spark.implicits._
     val H = "reuse.example.org"

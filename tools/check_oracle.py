@@ -8,6 +8,8 @@ For each <verifyOutDir>/<name>/ parquet dump produced by graft.Verify, runs
 the matching SQL from oracle_sql.json in DuckDB over the same sf tables,
 sorts columns by name, sorts rows, and compares values exactly — the same
 shape of check the driver applies. Exit code 1 if any query mismatches.
+Each [OK]/[FAIL] line carries that query's compare wall (the DuckDB run
+plus the canonical sort), and the five slowest compares close the report.
 
 Regression note (r2): the DuckDB side MUST go through fetch_arrow_table(),
 not fetchall(). fetchall() coerces DECIMAL(38,0) — what DuckDB returns for
@@ -19,6 +21,7 @@ import json
 import math
 import os
 import sys
+import time
 
 import duckdb
 import pyarrow.parquet as pq
@@ -71,56 +74,66 @@ def main():
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracle = json.load(f)
 
-    failures = []
+    failures, walls = [], {}
     for name in sorted(os.listdir(out_dir)):
         qdir = os.path.join(out_dir, name)
         if not os.path.isdir(qdir):
             continue
-        files = [os.path.join(qdir, f) for f in os.listdir(qdir)
-                 if f.endswith(".parquet")]
-        spark_tbl = pq.read_table(files[0]) if files else None
-        if spark_tbl is None:
-            failures.append((name, "no spark output"))
-            continue
-        if name not in oracle:
-            print(f"  [rows-only] {name}: {spark_tbl.num_rows} rows")
-            if spark_tbl.num_rows == 0:
-                failures.append((name, "0 rows (rows-only check)"))
-            continue
-        try:
-            duck_tbl = con.execute(oracle[name]).fetch_arrow_table()
-            duck_names = duck_tbl.column_names
-            duck_rows = [tuple(duck_tbl.column(c)[i].as_py()
-                               for c in range(duck_tbl.num_columns))
-                         for i in range(duck_tbl.num_rows)]
-        except Exception as e:
-            failures.append((name, f"duckdb error: {e}"))
-            continue
-        s_names = spark_tbl.column_names
-        s_rows = [tuple(spark_tbl.column(c)[i].as_py()
-                        for c in range(spark_tbl.num_columns))
-                  for i in range(spark_tbl.num_rows)]
-        sn, sr = canon(s_names, s_rows)
-        dn, dr = canon(duck_names, duck_rows)
-        if sn != dn:
-            failures.append((name, f"schema mismatch: spark={sn} duck={dn}"))
-            continue
-        if len(sr) != len(dr):
-            failures.append((name, f"rowcount: spark={len(sr)} duck={len(dr)}"))
-            continue
-        bad = [(a, b) for a, b in zip(sr, dr) if a != b]
-        if bad:
-            failures.append((name, f"{len(bad)} value mismatches, first: "
-                                   f"spark={bad[0][0]} duck={bad[0][1]}"))
-            continue
-        print(f"  [OK] {name}: {len(sr)} rows, {len(sn)} cols")
+        t0 = time.perf_counter()
+        failure, ok = compare(con, oracle, name, qdir)
+        walls[name] = time.perf_counter() - t0
+        if failure is None:
+            print(f"  {ok} ({walls[name]:.2f} s)")
+        else:
+            failures.append((name, failure))
 
     if failures:
         print("\nFAILURES:")
         for n, msg in failures:
-            print(f"  [FAIL] {n}: {msg}")
+            print(f"  [FAIL] {n}: {msg} ({walls[n]:.2f} s)")
+    print("\nslowest compares:")
+    for n in sorted(walls, key=walls.get, reverse=True)[:5]:
+        print(f"  {walls[n]:9.2f} s  {n}")
+    if failures:
         sys.exit(1)
     print("\nall queries match")
+
+
+def compare(con, oracle, name, qdir):
+    """(failure message, None) on a mismatch, else (None, the [OK] or
+    [rows-only] line)."""
+    files = [os.path.join(qdir, f) for f in os.listdir(qdir)
+             if f.endswith(".parquet")]
+    spark_tbl = pq.read_table(files[0]) if files else None
+    if spark_tbl is None:
+        return "no spark output", None
+    if name not in oracle:
+        if spark_tbl.num_rows == 0:
+            return "0 rows (rows-only check)", None
+        return None, f"[rows-only] {name}: {spark_tbl.num_rows} rows"
+    try:
+        duck_tbl = con.execute(oracle[name]).fetch_arrow_table()
+        duck_names = duck_tbl.column_names
+        duck_rows = [tuple(duck_tbl.column(c)[i].as_py()
+                           for c in range(duck_tbl.num_columns))
+                     for i in range(duck_tbl.num_rows)]
+    except Exception as e:
+        return f"duckdb error: {e}", None
+    s_names = spark_tbl.column_names
+    s_rows = [tuple(spark_tbl.column(c)[i].as_py()
+                    for c in range(spark_tbl.num_columns))
+              for i in range(spark_tbl.num_rows)]
+    sn, sr = canon(s_names, s_rows)
+    dn, dr = canon(duck_names, duck_rows)
+    if sn != dn:
+        return f"schema mismatch: spark={sn} duck={dn}", None
+    if len(sr) != len(dr):
+        return f"rowcount: spark={len(sr)} duck={len(dr)}", None
+    bad = [(a, b) for a, b in zip(sr, dr) if a != b]
+    if bad:
+        return (f"{len(bad)} value mismatches, first: "
+                f"spark={bad[0][0]} duck={bad[0][1]}"), None
+    return None, f"[OK] {name}: {len(sr)} rows, {len(sn)} cols"
 
 
 if __name__ == "__main__":
